@@ -3,30 +3,39 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** E3 pipeline parity: `transform_load_journeys` — the reference's flagship
   * lifecycle (`/root/reference/spark/transform_load.py:452-509`):
   *
-  *   1. scan + type the month's journeys (`:180-216`)
+  *   1. scan + type the month's journeys (`:180-216`), computed ONCE and
+  *      persisted for the three actions below
   *   2. split into rental dimension and fact projection (`:224-231`)
   *   3. eager global min/max action bounding the dimension re-scan — the
   *      hand-rolled dynamic filter (`:460-483`)
-  *   4. `get_weather_ids` (`:295-400`): per side in {start, end}, inner-join
-  *      the timestamp dim (J3), 4-key calendar left-join the weather dim
-  *      (J4), rename to `{side}_weather_id`, then self-join re-merge on the
-  *      fact key (J5, `:393-398`)
+  *   4. `get_weather_ids` (`:295-400`): per side in {start, end}, left-join
+  *      the timestamp dim (J3), then 4-key calendar left-join the weather
+  *      dim (J4), adding `{side}_weather_id` as a column of the fact
   *   5. append-write dim_rental + month-partitioned fact (`:496-509`)
+  *
+  * Step 4 is the reference's inner join + J5 self-join re-merge on the fact
+  * key (`:393-398`) with the re-merge folded away: `dim_timestamp.id` is
+  * unique, so "inner join, then left-merge back on rental_id" equals "left
+  * join", and an off-grid timestamp still gets a null weather id.
+  * EtlPipelineSpec checks the result against the reference chain spelled
+  * in SQL.
   *
   * Fixture mapping (SURVEY.md §7): journeys ← lineitem × orders (rental_id
   * from orderkey+linenumber, ship/receipt timestamps as start/end),
   * stations ← a bounded key range, weather dim ← TransformWeather's output.
   *
-  * Scale notes: the dim re-scan filter is two driver-side scalars (the
-  * reference's own trick — acceptable at any scale); the timestamp-dim
-  * joins are broadcast-eligible after the min/max pushdown; the final
-  * self-join re-merge keys on rental_id, which is unique on both sides, so
-  * the left join preserves fact cardinality (asserted in tests).
+  * Scale notes: the journeys frame (lineitem scan + the per-order window
+  * shuffle) is read once; the rental write, the bound and the fact write
+  * read the persisted copy. The dim re-scan filter is two scalars from one
+  * eager action (the reference's own trick — acceptable at any scale); both
+  * dims join broadcast-eligible after the min/max pushdown, so the fact
+  * is never shuffled on its key (PlanShapeSpec).
   */
 object TransformJourneys {
 
@@ -72,8 +81,9 @@ object TransformJourneys {
       unix_timestamp(col("end_timestamp")).cast("int").as("end_timestamp_id"),
       col("start_timestamp"), col("end_timestamp"))
 
-  /** Steps 3-4: annotate the fact with `{side}_weather_id` via the
-    * timestamp dim + 4-key weather join per side, then re-merge. */
+  /** Steps 3-4: add `{side}_weather_id` to the fact via the timestamp dim
+    * + 4-key weather join per side. Two left joins per side on the bounded
+    * dims; fact rows and columns pass through in order. */
   def withWeatherIds(s: SparkSession, fact: DataFrame,
                      timestampDim: DataFrame, weatherDim: DataFrame): DataFrame = {
     // eager min/max action -> literal bounds pushed into the dim re-scan
@@ -83,46 +93,43 @@ object TransformJourneys {
     val (mn, mx) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
     val tsDim = timestampDim
       .filter(col("timestamp") >= lit(mn) && col("timestamp") <= lit(mx))
-      .select(col("id").as("ts_id"), col("year"), col("month"), col("dayofmonth"))
+      .select(col("id"), col("year"), col("month"), col("dayofmonth"))
     val weather = weatherDim.select(
       col("id").as("weather_id"), col("location_id"),
       year(col("timestamp")).cast("int").as("year"),
       month(col("timestamp")).cast("int").as("month"),
       dayofmonth(col("timestamp")).cast("int").as("dayofmonth"))
 
-    def annotate(side: String): DataFrame =
-      fact
-        .join(tsDim, fact(s"${side}_timestamp_id") === tsDim("ts_id"), "inner")
-        .join(weather,
-          Seq("year", "month", "dayofmonth").map(c => weather(c) === tsDim(c))
-            .reduce(_ && _) &&
-            weather("location_id") === fact(s"${side}_station_id"),
-          "left")
-        .select(fact("rental_id").as(s"${side}_rental_id"),
-                weather("weather_id").as(s"${side}_weather_id"))
-
-    val start = annotate("start")
-    val end = annotate("end")
-    fact
-      .join(start, fact("rental_id") === start("start_rental_id"), "left")
-      .join(end, fact("rental_id") === end("end_rental_id"), "left")
-      .drop("start_rental_id", "end_rental_id")
+    val calendar = Seq("year", "month", "dayofmonth")
+    Seq("start", "end").foldLeft(fact) { (f, side) =>
+      f.join(tsDim.withColumnRenamed("id", s"${side}_timestamp_id"),
+          Seq(s"${side}_timestamp_id"), "left")
+        .join(weather
+            .withColumnRenamed("location_id", s"${side}_station_id")
+            .withColumnRenamed("weather_id", s"${side}_weather_id"),
+          s"${side}_station_id" +: calendar, "left")
+        .drop(calendar: _*)
+    }.select((fact.columns.toSeq :+ "start_weather_id" :+ "end_weather_id").map(col): _*)
   }
+
+  /** Storage of the persisted journeys: spills rather than recomputes
+    * when a month outgrows executor memory. */
+  private val JourneysStorage = StorageLevel.MEMORY_AND_DISK
 
   /** Run E3 end-to-end against a warehouse previously populated by
     * SetupDatabase + TransformWeather; returns (dim_rental rows, fact rows). */
   def run(s: SparkSession, dir: String, warehouse: String,
           firstRun: Boolean): (Long, Long) = {
-    val j = journeys(s, dir)
-    val rental = rentalDimension(j)
-    val fact = factProjection(j)
-    val tsDim = s.read.parquet(s"$warehouse/dim_timestamp")
-    val weatherDim = s.read.parquet(s"$warehouse/dim_weather")
-    val annotated = withWeatherIds(s, fact, tsDim, weatherDim)
-      .withColumn("ym", date_format(col("end_timestamp"), "yyyy-MM"))
-    rental.write.mode(if (firstRun) "overwrite" else "append")
-      .parquet(s"$warehouse/dim_rental")
-    Warehouse.writePartitioned(annotated, "ym", s"$warehouse/fact_journey", firstRun)
+    val j = journeys(s, dir).persist(JourneysStorage)
+    try {
+      val tsDim = s.read.parquet(s"$warehouse/dim_timestamp")
+      val weatherDim = s.read.parquet(s"$warehouse/dim_weather")
+      val annotated = withWeatherIds(s, factProjection(j), tsDim, weatherDim)
+        .withColumn("ym", date_format(col("end_timestamp"), "yyyy-MM"))
+      rentalDimension(j).write.mode(if (firstRun) "overwrite" else "append")
+        .parquet(s"$warehouse/dim_rental")
+      Warehouse.writePartitioned(annotated, "ym", s"$warehouse/fact_journey", firstRun)
+    } finally j.unpersist()
     (s.read.parquet(s"$warehouse/dim_rental").count(),
      s.read.parquet(s"$warehouse/fact_journey").count())
   }

@@ -13,31 +13,34 @@ import graft.Tables
   *
   * Fixture mapping: `events` plays the weather sources — three event types
   * become the three measures (rainfall/tasmin/tasmax), (user_id, date)
-  * plays (location_id, time). All three branches aggregate from one scan
-  * and join on the same key, so the shuffles share partitioning.
+  * plays (location_id, time). The three sources share one scan and one
+  * aggregation on that key, one conditional average per measure; the J1
+  * left join from rainfall becomes "keep the keys with a rainfall row".
+  * EtlPipelineSpec checks the result against the three-branch join.
   */
 object TransformWeather {
 
-  private def measure(s: SparkSession, dir: String, typ: String, name: String): DataFrame =
-    Tables.events(s, dir)
-      .filter(col("event_type") === typ)
-      .groupBy(col("user_id").as("location_id"), col("ts").cast("date").as("time"))
-      .agg(avg(col("value")).as(name))
+  /** Event type standing in for each measure's source. */
+  private val measures = Seq("rainfall" -> "click", "tasmin" -> "view", "tasmax" -> "purchase")
 
   /** The assembled weather dimension for one run (all days here; a month
     * slice in the reference's loop). */
   def weatherDimension(s: SparkSession, dir: String): DataFrame = {
-    val rainfall = measure(s, dir, "click", "rainfall")
-    val tasmin = measure(s, dir, "view", "tasmin")
-    val tasmax = measure(s, dir, "purchase", "tasmax")
-    rainfall
-      .join(tasmin, Seq("location_id", "time"), "left")
-      .join(tasmax, Seq("location_id", "time"), "left")
+    def of(typ: String) = col("event_type") === typ
+    // J1's equi-join matches no null key: such a day keeps only its rainfall
+    val keyed = col("location_id").isNotNull && col("time").isNotNull
+    Tables.events(s, dir)
+      .filter(col("event_type").isin(measures.map(_._2): _*))
+      .groupBy(col("user_id").as("location_id"), col("ts").cast("date").as("time"))
+      .agg(count(when(of("click"), 1)).as("n_rainfall"),
+        measures.map { case (name, typ) => avg(when(of(typ), col("value"))).as(name) }: _*)
+      .filter(col("n_rainfall") > 0)
       .withColumn("timestamp", col("time").cast("timestamp"))
       .withColumn("timestamp_id", unix_timestamp(col("timestamp")).cast("int"))
       .withColumn("id", concat_ws("_", col("location_id"), col("timestamp_id")))
-      .select("id", "location_id", "timestamp_id", "timestamp",
-        "rainfall", "tasmin", "tasmax")
+      .select(col("id"), col("location_id"), col("timestamp_id"), col("timestamp"),
+        col("rainfall"),
+        when(keyed, col("tasmin")).as("tasmin"), when(keyed, col("tasmax")).as("tasmax"))
   }
 
   /** Run E2 with the overwrite-vs-append bootstrap switch

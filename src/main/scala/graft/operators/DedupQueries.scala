@@ -195,7 +195,7 @@ object DedupQueries {
   private def mhSigStaged(s: SparkSession, dir: String): DataFrame = {
     val p = mhSigCache.computeIfAbsent(
       graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "mhsig", "v1", dir, Seq("documents")) { base =>
+        graft.etl.Layouts.stage(s, "mhsig", s"v1;h=$nHashes;sh=3", dir, Seq("documents")) { base =>
           val sigRows = Tables.documents(s, dir)
             .withColumn("toks", expr("split(text, ' ')"))
             .filter(expr("size(toks) >= 3"))
@@ -467,7 +467,7 @@ object DedupQueries {
   private def simhashStaged(s: SparkSession, dir: String): DataFrame = {
     val p = simhashCache.computeIfAbsent(
       graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "simhash32", "v1", dir,
+        graft.etl.Layouts.stage(s, "simhash32", "v1;bits=32", dir,
           Seq("documents")) { base =>
           simhashDf(s, dir).write.mode("overwrite").parquet(s"$base/sh")
           s"$base/sh"

@@ -897,11 +897,13 @@ object QualityFilterQueries {
     * sidecar idiom). */
   private val unigramLmCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Quantization of each token's LM probability (integer picounits). */
+  private val unigramLmScale = "1e12"
 
   private def unigramLmBase(s: SparkSession, dir: String): String =
     unigramLmCache.computeIfAbsent(
       graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "unigramlm", "v1", dir,
+        graft.etl.Layouts.stage(s, "unigramlm", s"v1;scale=$unigramLmScale", dir,
           Seq("documents")) { base =>
           val tok = Tables.documents(s, dir)
             .select(col("doc_id"), explode(expr("split(text, ' ')")).as("tok"))
@@ -911,7 +913,7 @@ object QualityFilterQueries {
           val totalV = counts.agg(sum("cnt")).first().getLong(0)
           tok.join(counts, Seq("tok"))
             .withColumn("pq", expr(
-              s"cast(floor(cast(cnt as double) / cast($totalV as double) * 1e12) as bigint)"))
+              s"cast(floor(cast(cnt as double) / cast($totalV as double) * $unigramLmScale) as bigint)"))
             .groupBy("doc_id")
             .agg(count(lit(1)).as("n_tokens"), sum("pq").as("spq"))
             .write.mode("overwrite").parquet(s"$base/perdoc")

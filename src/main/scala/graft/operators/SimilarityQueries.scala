@@ -1849,16 +1849,18 @@ object SimilarityQueries {
   /** KNN self-join: the top-3 neighbors of EVERY corpus vector (not a
     * bounded probe set — the all-corpus retrieval shape behind
     * near-dup mining and similarity-based mixture construction). Exact
-    * all-pairs is O(n^2); this is the scale form: candidates come from
-    * the same banded sign-LSH equi-join as q26, symmetrized so each pair
-    * serves both endpoints, then a per-vector top-3 window over
-    * CANDIDATES only (bounded by bucket geometry, not corpus size).
+    * all-pairs is O(n^2); this is the scale form: candidates are the
+    * standing `ndpairs` layout's scored pairs (the same banded sign-LSH
+    * equi-join as q26, run once at the layout build), symmetrized so
+    * each pair serves both endpoints, then a per-vector top-3 window
+    * over CANDIDATES only (bounded by bucket geometry, not corpus size).
     * Neighbors outside every shared band are unreachable by
     * construction — the LSH recall tradeoff, which the oracle mirrors
     * exactly, so the approximation itself is hash-checked. Vectors with
     * no pair above the graph's 0.35 floor simply have no rows (a
-    * full-coverage variant unions a low-cosine fallback; the operator
-    * pins the candidate-generation shape). */
+    * full-coverage variant unions a low-cosine fallback). In attach mode
+    * the plan is a leaf scan, a union and the window: the layout build,
+    * not this operator, fixes the candidate-generation shape. */
   def q80KnnJoin(s: SparkSession, dir: String): DataFrame = {
     // round-16: twice-referenced pair frame -> staged leaf (see q194)
     val pairs = stagedPairs(s, dir)

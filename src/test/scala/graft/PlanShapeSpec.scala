@@ -566,4 +566,30 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(countOccurrences(p, "documents.parquet") == 0,
       s"q321's recurring plan must not scan raw documents (leaves only):\n$p")
   }
+
+  test("E3: weather ids join the fact to the dims; no re-merge on rental_id") {
+    import graft.etl.{SetupDatabase, TransformJourneys, TransformWeather}
+    val wh = graft.Staging.fresh("plan_e3")
+    SetupDatabase.run(spark, sfDir, wh)
+    TransformWeather.run(spark, sfDir, wh, firstRun = true)
+    val df = TransformJourneys.withWeatherIds(spark,
+      TransformJourneys.factProjection(TransformJourneys.journeys(spark, sfDir)),
+      spark.read.parquet(s"$wh/dim_timestamp"), spark.read.parquet(s"$wh/dim_weather"))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("SortMergeJoin"), s"both dims must broadcast:\n$p")
+    assert(!p.contains("hashpartitioning(rental_id"),
+      s"the fact must never shuffle on its key:\n$p")
+    // at this scale the fact itself fits a broadcast, so a self-join
+    // re-merge would pass the strings above: pin the joins themselves —
+    // two per side, none keyed on the fact key
+    val joins = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.size == 4, s"expected two joins per side:\n${df.queryExecution.optimizedPlan}")
+    joins.foreach { j =>
+      assert(!j.condition.exists(_.references.exists(_.name == "rental_id")),
+        s"join keyed on rental_id:\n$j")
+    }
+  }
 }
