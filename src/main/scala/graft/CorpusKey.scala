@@ -1,7 +1,8 @@
 package graft
 
-/** Content fingerprint for per-JVM cache keys over staged corpus
-  * artifacts (trained codebooks, propagated labels, bucketed layouts).
+/** Content fingerprint of a source table — the staleness key of every
+  * standing index over it (trained codebooks, propagated labels,
+  * bucketed layouts).
   *
   * Every staged index in the engine is a deterministic function of one
   * source table, so "have I already built this?" reduces to "is the
@@ -25,11 +26,11 @@ package graft
   * carry. CacheFingerprintSpec proves the regen-miss for each cached
   * family.
   *
-  * Every staged per-JVM cache keys through here (the dedup/similarity
-  * codebook, label, pair, and fingerprint-index caches, the Z-order
-  * layout map, the quality-filter feature stage, and the streaming
-  * schema-probe cache); callers append their own geometry suffixes
-  * (sample mod, sub-vector count) after the key.
+  * Two kinds of caller key through here: graft.etl.Layouts, whose
+  * source fingerprint is the attach-or-rebuild check of every durable
+  * standing index, and the few per-JVM memos that hold values no layout
+  * holds (the streaming schema probe, the trained quality-filter
+  * weights, the constructed lake fixtures).
   *
   * The walk goes through the Hadoop FileSystem API (resolved from the
   * active session's Hadoop conf when one exists), so the SAME

@@ -1,8 +1,9 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 import scala.jdk.CollectionConverters._
 
@@ -27,10 +28,18 @@ import scala.jdk.CollectionConverters._
   * files (name, size, mtime) and a builder-supplied version string
   * (layout geometry + code revision). Either changing — a regenerated
   * fixture, a widened bucket count — misses the attach check and forces
-  * a rebuild. Concurrent first builds in ONE JVM are serialized by the
-  * callers' per-dir `computeIfAbsent`; concurrent builds from two JVMs
-  * are best-effort last-writer-wins (the manifest is written only after
-  * a complete build, so a crashed or in-flight build never attaches). */
+  * a rebuild.
+  *
+  * This registry is the ONLY cache for standing indexes: callers call
+  * [[stage]]/[[attachOrBuild]] on every invocation, and an attach costs
+  * one manifest read plus the source fingerprint walk — no Spark job.
+  * The object holds no in-memory state, so two concurrent first builds
+  * (two threads or two JVMs) are made safe through the file system:
+  * each build writes its own nonce-named generation dir, and the
+  * manifest is written to a temp file and published by an atomic
+  * rename, so the manifest always names one builder's complete file
+  * set (last publisher wins; a crashed or in-flight build never
+  * attaches). Both racing builders pay the build. */
 object Layouts {
 
   /** Durable root (NOT swept at JVM exit — contrast graft.Staging).
@@ -103,7 +112,12 @@ object Layouts {
       m.regs.map(r =>
         s"reg\t${r.table}\t${r.path}\t${r.nBuckets}\t${r.key}\t${r.schemaDdl}")
     Files.createDirectories(Paths.get(base))
-    Files.writeString(manifestPath(base), lines.mkString("\n"))
+    // publish by rename: a reader sees the previous manifest or this one,
+    // never a partial file, and two racing publishers leave exactly one
+    val tmp = Paths.get(base, s"_graft_manifest.${java.util.UUID.randomUUID()}.tmp")
+    Files.writeString(tmp, lines.mkString("\n"))
+    Files.move(tmp, manifestPath(base),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   private def readManifest(base: String): Option[Manifest] = {
@@ -134,31 +148,30 @@ object Layouts {
     * moves the path, and a session that registered the old generation
     * would otherwise keep silently serving stale data after attaching
     * the new manifest — so a location mismatch drops and recreates. */
-  def register(s: SparkSession, regs: Seq[BucketedReg]): Unit =
+  def register(s: SparkSession, regs: Seq[BucketedReg]): Unit = {
+    val catalog = s.sessionState.catalog
     regs.foreach { r =>
-      val stale = s.catalog.tableExists(r.table) && {
-        val loc = s.sql(s"DESCRIBE FORMATTED ${r.table}")
-          .filter("col_name = 'Location'")
-          .collect().headOption.map(_.getString(1)).getOrElse("")
-        val locPath = new org.apache.hadoop.fs.Path(loc).toUri.getPath
-        val regPath = new org.apache.hadoop.fs.Path(r.path).toUri.getPath
-        if (locPath != regPath) { s.sql(s"DROP TABLE ${r.table}"); true }
-        else false
-      }
-      if (stale || !s.catalog.tableExists(r.table))
+      val id = TableIdentifier(r.table)
+      val current = catalog.tableExists(id) &&
+        catalog.getTableMetadata(id).location.getPath ==
+          new org.apache.hadoop.fs.Path(r.path).toUri.getPath
+      if (!current) {
+        s.sql(s"DROP TABLE IF EXISTS ${r.table}")
         s.sql(s"CREATE TABLE ${r.table} (${r.schemaDdl}) USING parquet " +
           s"CLUSTERED BY (${r.key}) SORTED BY (${r.key}) " +
           s"INTO ${r.nBuckets} BUCKETS LOCATION '${r.path}'")
+      }
     }
+  }
 
   /** Plain-file durable stage — [[attachOrBuild]] for layouts with no
     * catalog tables (staged pair streams, trained codebooks, propagated
     * labels): `build` writes under the given durable base dir and
     * returns the data path consumers read (usually the base or a
     * subdir; a rotating fixpoint builder returns whichever leaf won).
-    * A later JVM with a matching manifest gets that path back with
-    * ZERO build jobs — this is what turns the per-JVM staged caches
-    * into once-per-corpus index builds. */
+    * A later call — in this JVM or another — with a matching manifest
+    * gets that path back with ZERO build jobs, so a staged derivation
+    * is a once-per-corpus index build. */
   def stage(s: SparkSession, kind: String, version: String,
             sourceDir: String, sourceTables: Seq[String])(
       build: String => String): String =
@@ -182,14 +195,16 @@ object Layouts {
         m
       case _ =>
         // stale or absent: invalidate first so a failed build can never
-        // be attached by a later session. The build lands in a
-        // (version, fingerprint)-keyed GENERATION subdir: a stale
-        // rebuild must never overwrite files an in-flight reader of the
-        // previous layout may still be scanning (pre-round-15 staging
-        // dirs gave that isolation for free; the durable registry keeps
-        // it).
+        // be attached by a later session. The build lands in its own
+        // GENERATION subdir — (version, fingerprint) hash plus a
+        // per-build nonce: a stale rebuild must never overwrite files an
+        // in-flight reader of the previous layout may still be scanning,
+        // and two concurrent builders must never interleave their writes
+        // in one dir
         Files.deleteIfExists(manifestPath(base))
-        val gen = s"$base/g_${md5hex(s"$version\n$fp").take(10)}"
+        val genName = s"g_${md5hex(s"$version\n$fp").take(10)}_" +
+          java.util.UUID.randomUUID().toString.take(8)
+        val gen = s"$base/$genName"
         Files.createDirectories(Paths.get(gen))
         val (regs, dataPath) = build(gen)
         val m = Manifest(kind, version, fp, dataPath, regs)
@@ -200,7 +215,7 @@ object Layouts {
         // survived a full rebuild cycle unreferenced and is reclaimed
         // here, so N source regens leave at most two generations on
         // disk, not N
-        reapOldGenerations(base, keep = Set(s"g_${md5hex(s"$version\n$fp").take(10)}"))
+        reapOldGenerations(base, keep = Set(genName))
         m
     }
   }

@@ -57,32 +57,21 @@ object Zorder {
     .withColumn("zb", expr(s"cast($zExpr as int)"))
 
   /** One layout per source FINGERPRINT (graft.CorpusKey over the events
-    * part files — round 11: the bare-dir key let an in-session regen
-    * serve a stale path for the JVM lifetime), cached per JVM and
-    * DURABLE across JVMs (graft.etl.Layouts: a later session re-attaches
-    * via the manifest — zero rebuild jobs — and a regenerated source dir
-    * misses the fingerprint check and rebuilds, so the pre-round-9
-    * stale-on-regen hazard is gone; CacheFingerprintSpec proves the
-    * in-session regen miss too). computeIfAbsent locks per key: one dir's first
-    * build no longer serializes an unrelated dir's behind it (the
-    * fpIndexCache idiom, unified per round-8 advice). */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: simulate a fresh JVM (the durable layout remains). */
-  private[graft] def resetCacheForTest(): Unit = layouts.clear()
-
+    * part files), DURABLE through graft.etl.Layouts: every call — in
+    * this JVM or a later one — re-attaches via the manifest with zero
+    * rebuild jobs, and a regenerated source dir misses the fingerprint
+    * check and rebuilds, so a stale layout is never served
+    * (CacheFingerprintSpec proves the in-session regen miss). */
   def layoutFor(s: SparkSession, dir: String): String =
-    layouts.computeIfAbsent(graft.CorpusKey(dir, "events.parquet"), _ =>
-      graft.etl.Layouts.attachOrBuild(s, "zorder", s"v1;bits=$bits", dir,
-        Seq("events")) { base =>
-        val path = s"$base/data"
-        bucketed(graft.Tables.events(s, dir))
-          // one task per cell -> one file per partition dir
-          .repartition(col("zb"))
-          .write.mode("overwrite").partitionBy("zb").parquet(path)
-        (Nil, path)
-      }.dataPath)
+    graft.etl.Layouts.stage(s, "zorder", s"v1;bits=$bits", dir,
+      Seq("events")) { base =>
+      val path = s"$base/data"
+      bucketed(graft.Tables.events(s, dir))
+        // one task per cell -> one file per partition dir
+        .repartition(col("zb"))
+        .write.mode("overwrite").partitionBy("zb").parquet(path)
+      path
+    }
 
   /** Rectangle read: partition pruning via the exact cell enumeration. */
   def readRectangle(s: SparkSession, dir: String,

@@ -35,39 +35,34 @@ object AnalyticsQueries {
     * corner explodes, peel passes — still run per invocation against
     * these leaf scans; SPARK_GRAFT_WAREHOUSE_DIR at an empty dir
     * measures the one shared build (the round-16 §2 contract). */
-  private val copGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def copurchaseGraphBase(s: SparkSession, dir: String): String =
-    copGraphCache.computeIfAbsent(
-      graft.CorpusKey(dir, "lineitem.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "copgraph", "v1;ok<15000", dir,
-          Seq("lineitem")) { base =>
-          val s2 = s
-          import s2.implicits._
-          val op = Tables.lineitem(s, dir)
-            .filter(col("l_orderkey") < 15000)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-          op.as("a").join(op.as("b"), $"a.o" === $"b.o" && $"a.p" < $"b.p")
-            .select($"a.p".as("pa"), $"b.p".as("pb")).distinct()
-            .write.mode("overwrite").parquet(s"$base/edges")
-          val edges = s.read.parquet(s"$base/edges")
-          val deg = edges.select(col("pa").as("node"))
-            .unionAll(edges.select(col("pb").as("node")))
-            .groupBy("node").agg(count(lit(1)).as("d"))
-          edges
-            .join(deg.withColumnRenamed("node", "pa").withColumnRenamed("d", "da"), "pa")
-            .join(deg.withColumnRenamed("node", "pb").withColumnRenamed("d", "db"), "pb")
-            .select(
-              when(col("da") < col("db") ||
-                   (col("da") === col("db") && col("pa") < col("pb")), col("pa"))
-                .otherwise(col("pb")).as("src"),
-              when(col("da") < col("db") ||
-                   (col("da") === col("db") && col("pa") < col("pb")), col("pb"))
-                .otherwise(col("pa")).as("dst"))
-            .write.mode("overwrite").parquet(s"$base/oriented")
-          base
-        })
+    graft.etl.Layouts.stage(s, "copgraph", "v1;ok<15000", dir,
+      Seq("lineitem")) { base =>
+      val s2 = s
+      import s2.implicits._
+      val op = Tables.lineitem(s, dir)
+        .filter(col("l_orderkey") < 15000)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+      op.as("a").join(op.as("b"), $"a.o" === $"b.o" && $"a.p" < $"b.p")
+        .select($"a.p".as("pa"), $"b.p".as("pb")).distinct()
+        .write.mode("overwrite").parquet(s"$base/edges")
+      val edges = s.read.parquet(s"$base/edges")
+      val deg = edges.select(col("pa").as("node"))
+        .unionAll(edges.select(col("pb").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("d"))
+      edges
+        .join(deg.withColumnRenamed("node", "pa").withColumnRenamed("d", "da"), "pa")
+        .join(deg.withColumnRenamed("node", "pb").withColumnRenamed("d", "db"), "pb")
+        .select(
+          when(col("da") < col("db") ||
+               (col("da") === col("db") && col("pa") < col("pb")), col("pa"))
+            .otherwise(col("pb")).as("src"),
+          when(col("da") < col("db") ||
+               (col("da") === col("db") && col("pa") < col("pb")), col("pb"))
+            .otherwise(col("pa")).as("dst"))
+        .write.mode("overwrite").parquet(s"$base/oriented")
+      base
+    }
 
   private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"${copurchaseGraphBase(s, dir)}/edges")

@@ -824,7 +824,7 @@ object CorpusQueries {
     .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
 
   /** The trained bigram LM as STAGED LEAVES (c2/c1 count parquets +
-    * the vocab scalar), once per corpus fingerprint per JVM — the
+    * the vocab scalar), once per corpus fingerprint — the
     * CCNet shape made explicit: the language model is trained ONCE and
     * scores many batches, so its counts are an artifact, not a
     * subtree. Staging is also what makes the hot-prefix skew
@@ -836,32 +836,23 @@ object CorpusQueries {
     * the count frames re-shuffle onto the join keys through ordinary
     * exchanges and a stop-wordy hot prefix skew-splits at runtime
     * (SkewJoinSpec pins the split firing AND result preservation). */
-  /** Test hook: forget the durable LM-stage cache (the Layouts files
-    * and manifest remain, exactly what a fresh JVM sees). */
-  private[graft] def resetDurableStagesForTest(): Unit = bigramLmCache.clear()
-
-  private val bigramLmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, Long)]()
-
   /** The registered-query LM stage, durable through the Layouts
     * registry (round 15): counts land under the registry base, the
-    * vocab scalar in a sidecar file, so a later JVM attaches instead of
-    * re-training. The in-JVM map still short-circuits repeat calls. */
-  private def stagedBigramLm(s: SparkSession, dir: String): (String, String, Long) =
-    bigramLmCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ => {
-        val base = graft.etl.Layouts.stage(s, "bglm", "v1", dir,
-          Seq("documents")) { b =>
-          val (_, _, v) = trainBigramLm(s, Tables.documents(s, dir), Some(b))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(b, "vocab.txt"),
-            v.toString.getBytes("UTF-8"))
-          b
-        }
-        val v = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(base, "vocab.txt")), "UTF-8").trim.toLong
-        (s"$base/c2", s"$base/c1", v)
-      })
+    * vocab scalar in a sidecar file that every call re-reads, so a
+    * later call attaches instead of re-training. */
+  private def stagedBigramLm(s: SparkSession, dir: String): (String, String, Long) = {
+    val base = graft.etl.Layouts.stage(s, "bglm", "v1", dir,
+      Seq("documents")) { b =>
+      val (_, _, v) = trainBigramLm(s, Tables.documents(s, dir), Some(b))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(b, "vocab.txt"),
+        v.toString.getBytes("UTF-8"))
+      b
+    }
+    val v = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(base, "vocab.txt")), "UTF-8").trim.toLong
+    (s"$base/c2", s"$base/c1", v)
+  }
 
   /** Train the add-one-smoothed LM counts into staged parquets (under
     * `under` when given — the durable form — else fresh session staging;
@@ -1195,8 +1186,8 @@ object CorpusQueries {
     * manifest delta a training run applies.
     *
     * Scale shape: splits are the codegen'd q88 hash projection; the
-    * cluster labels are the STAGED ccLabels fixpoint (once per corpus
-    * per JVM); the representative's split rides ONE equi-join of the
+    * cluster labels are the STAGED ccLabels fixpoint (once per corpus,
+    * durable); the representative's split rides ONE equi-join of the
     * split frame on the label key (the rep id is the label — no
     * argmin pass); rollups are bounded by 3 splits. */
   def q284SplitRepair(s: SparkSession, dir: String): DataFrame = {

@@ -143,25 +143,19 @@ object DedupQueries {
   def q22MinhashLsh(s: SparkSession, dir: String): DataFrame =
     stagedLshPairs(s, dir).orderBy("doc_a", "doc_b")
 
-  /** The UNCAPPED q22 pair stream as a staged parquet leaf, once per
-    * corpus fingerprint per JVM (the fuzzyPairsCache idiom): the
-    * signature+verify pass is the expensive part and is a pure function
+  /** The UNCAPPED q22 pair stream as a durable standing layout, one
+    * build per documents fingerprint: the signature+verify pass is the expensive part and is a pure function
     * of the corpus, so its consumers (q22's presentation sort, q226's
     * split labeling) read a leaf scan. Capped variants (LshSkewSpec)
     * stay on the direct path — the cap is a production knob, not a
     * corpus property. */
-  private val lshPairsStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedLshPairs(s: SparkSession, dir: String): DataFrame = {
-    val p = lshPairsStageCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "lshdocpairs", "v1", dir,
-          Seq("documents")) { base =>
-          minhashLshPairs(s, dir, maxBucketSize = None)
-            .write.mode("overwrite").parquet(s"$base/pairs")
-          s"$base/pairs"
-        })
+    val p = graft.etl.Layouts.stage(s, "lshdocpairs", "v1", dir,
+      Seq("documents")) { base =>
+      minhashLshPairs(s, dir, maxBucketSize = None)
+        .write.mode("overwrite").parquet(s"$base/pairs")
+      s"$base/pairs"
+    }
     s.read.parquet(p)
   }
 
@@ -189,26 +183,21 @@ object DedupQueries {
     * construction [[minhashBandsOf]] inlines into the q22/q311 one-time
     * index builds — and q123's calibration consumes it three ways (bands
     * + both pair sides). */
-  private val mhSigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def mhSigStaged(s: SparkSession, dir: String): DataFrame = {
-    val p = mhSigCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "mhsig", s"v1;h=$nHashes;sh=3", dir, Seq("documents")) { base =>
-          val sigRows = Tables.documents(s, dir)
-            .withColumn("toks", expr("split(text, ' ')"))
-            .filter(expr("size(toks) >= 3"))
-            .select(col("doc_id"),
-              explode(expr(s"array_distinct($shinglesExpr)")).as("x"))
-            .select(col("doc_id"),
-              concat(md5(col("x")), md5(concat(lit("x"), col("x")))).as("h"))
-          val sigCols = (0 until nHashes)
-            .map(i => min(expr(s"substring(h, ${i * 5 + 1}, 5)")).as(s"s$i"))
-          sigRows.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-            .write.mode("overwrite").parquet(s"$base/sig")
-          s"$base/sig"
-        })
+    val p = graft.etl.Layouts.stage(s, "mhsig", s"v1;h=$nHashes;sh=3", dir, Seq("documents")) { base =>
+      val sigRows = Tables.documents(s, dir)
+        .withColumn("toks", expr("split(text, ' ')"))
+        .filter(expr("size(toks) >= 3"))
+        .select(col("doc_id"),
+          explode(expr(s"array_distinct($shinglesExpr)")).as("x"))
+        .select(col("doc_id"),
+          concat(md5(col("x")), md5(concat(lit("x"), col("x")))).as("h"))
+      val sigCols = (0 until nHashes)
+        .map(i => min(expr(s"substring(h, ${i * 5 + 1}, 5)")).as(s"s$i"))
+      sigRows.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
+        .write.mode("overwrite").parquet(s"$base/sig")
+      s"$base/sig"
+    }
     s.read.parquet(p)
   }
 
@@ -292,9 +281,6 @@ object DedupQueries {
     * delta-touching candidates only; the staged index reads are leaf
     * scans. This is the weekly-crawl ingest shape: the standing corpus
     * is touched only through its 60-byte-per-doc band index. */
-  private val lshBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build the standing index under `stage`: the base corpus's band
     * frame and its verified pair stream, both as parquet leaves. */
   private[graft] def lshIndexBuild(s: SparkSession, base: DataFrame,
@@ -339,16 +325,13 @@ object DedupQueries {
   def q311LshIncremental(s: SparkSession, dir: String): DataFrame = {
     // the standing index builds once per corpus fingerprint — DURABLE
     // through the Layouts registry (round-15): a new JVM re-attaches the
-    // staged bands + pair stream instead of re-signaturing the corpus;
-    // the in-JVM map only serializes concurrent first calls
-    val pth = lshBaseCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "lshbase", "v1;mod=7", dir,
-          Seq("documents")) { base =>
-          lshIndexBuild(s,
-            Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7), base)
-          base
-        })
+    // staged bands + pair stream instead of re-signaturing the corpus
+    val pth = graft.etl.Layouts.stage(s, "lshbase", "v1;mod=7", dir,
+      Seq("documents")) { base =>
+      lshIndexBuild(s,
+        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7), base)
+      base
+    }
     lshDeltaUpdate(s,
       Tables.documents(s, dir).filter(col("doc_id") % 10 === 7),
       Tables.documents(s, dir), pth)
@@ -461,17 +444,12 @@ object DedupQueries {
     * (the mhsig idiom, one build per documents fingerprint) — q42's band
     * self-join reads it on both sides. q23 stays on the lazy form: the
     * fingerprint computation IS its declared operator. */
-  private val simhashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def simhashStaged(s: SparkSession, dir: String): DataFrame = {
-    val p = simhashCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "simhash32", "v1;bits=32", dir,
-          Seq("documents")) { base =>
-          simhashDf(s, dir).write.mode("overwrite").parquet(s"$base/sh")
-          s"$base/sh"
-        })
+    val p = graft.etl.Layouts.stage(s, "simhash32", "v1;bits=32", dir,
+      Seq("documents")) { base =>
+      simhashDf(s, dir).write.mode("overwrite").parquet(s"$base/sh")
+      s"$base/sh"
+    }
     s.read.parquet(p)
   }
 
@@ -627,9 +605,6 @@ object DedupQueries {
     * Scale shape: recurring cost = |delta| decodes + one (band, bkey)
     * equi-join whose build side is 4×|delta| rows + bit_count on
     * delta-touching candidates; staged reads are leaf scans. */
-  private val phBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build the standing image index under `stage`: the base slice's
     * (doc_id, ahash) frame and its banded hamming ≤ 3 pair stream. */
   private[graft] def imageIndexBuild(s: SparkSession, base: DataFrame,
@@ -667,14 +642,12 @@ object DedupQueries {
   }
 
   def q317ImageIncremental(s: SparkSession, dir: String): DataFrame = {
-    val pth = phBaseCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "phbase", "v1;mod=7;h=3", dir,
-          Seq("documents")) { base =>
-          imageIndexBuild(s,
-            Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7), base)
-          base
-        })
+    val pth = graft.etl.Layouts.stage(s, "phbase", "v1;mod=7;h=3", dir,
+      Seq("documents")) { base =>
+      imageIndexBuild(s,
+        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7), base)
+      base
+    }
     imageDeltaUpdate(s,
       Tables.documents(s, dir).filter(col("doc_id") % 10 === 7), pth)
   }
@@ -686,16 +659,11 @@ object DedupQueries {
     * or recall audit tomorrow), across JVMs. q307 itself stays
     * registered over the live pass — it IS the measurement of the
     * decode path. */
-  private val phPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def stagedImagePairs(s: SparkSession, dir: String): DataFrame = {
-    val path = phPairsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "phpairs", "v1;h=3", dir, Seq("documents")) { base =>
-          q307ImageNeardup(s, dir).write.mode("overwrite").parquet(s"$base/pairs")
-          s"$base/pairs"
-        })
+    val path = graft.etl.Layouts.stage(s, "phpairs", "v1;h=3", dir, Seq("documents")) { base =>
+      q307ImageNeardup(s, dir).write.mode("overwrite").parquet(s"$base/pairs")
+      s"$base/pairs"
+    }
     s.read.parquet(path)
   }
 
@@ -725,21 +693,16 @@ object DedupQueries {
     * pair frame is a durable leaf), so the O(V+E) propagation is a
     * once-per-corpus index build like erlabels/cclabels, not a
     * per-invocation cost. */
-  private val phLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q316ImageClusterReps(s: SparkSession, dir: String): DataFrame = {
-    val path = phLabelsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        // the version pins the UPSTREAM pair-frame geometry too: the
-        // labels are a function of the h=3 banded pairs, so a radius
-        // bump must miss this attach check along with phpairs'
-        graft.etl.Layouts.stage(s, "phlabels", "v1;h=3", dir, Seq("documents")) { ck =>
-          labelsOfPairs(s, stagedImagePairs(s, dir)
-              .select(col("doc_a").as("ka"), col("doc_b").as("kb")), ck)
-            .write.mode("overwrite").parquet(s"$ck/labels")
-          s"$ck/labels"
-        })
+    // the version pins the UPSTREAM pair-frame geometry too: the
+    // labels are a function of the h=3 banded pairs, so a radius
+    // bump must miss this attach check along with phpairs'
+    val path = graft.etl.Layouts.stage(s, "phlabels", "v1;h=3", dir, Seq("documents")) { ck =>
+      labelsOfPairs(s, stagedImagePairs(s, dir)
+          .select(col("doc_a").as("ka"), col("doc_b").as("kb")), ck)
+        .write.mode("overwrite").parquet(s"$ck/labels")
+      s"$ck/labels"
+    }
     val labels = s.read.parquet(path)
     val quality = Tables.documents(s, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("nc"))
@@ -910,51 +873,6 @@ object DedupQueries {
       corpusPrints.filter(col("nfp").isNotNull)
         .select(col("nfp").as("cnfp")).distinct())
 
-  /** One bucketed index layout per corpus fingerprint (CorpusKey) per JVM. q85 is the
-    * RECURRING verdict-run shape — the layout write is its one-time
-    * bootstrap — so repeated invocations (bench trials, a long-lived
-    * session) reuse the pair instead of accumulating one catalog pair
-    * plus a corpus-sized layout copy per call. Since round 9 the layout
-    * is DURABLE (graft.etl.Layouts): files live under the warehouse
-    * root, and a cache miss first tries to RE-ATTACH an existing
-    * manifest (re-register the catalog tables over the files, zero data
-    * jobs) before paying a rebuild — so the bootstrap is one-time across
-    * JVMs, not per session (LayoutReattachSpec proves it).
-    * computeIfAbsent serializes two concurrent first builds of the same
-    * dir onto one layout. */
-  private val fpIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Test hook: simulate a fresh JVM — forget the cache and this
-    * session's catalog entries (the durable files and manifest remain,
-    * exactly what a new session would see). */
-  private[graft] def resetFpIndexForTest(s: SparkSession): Unit = {
-    val it = fpIndexCache.values().iterator()
-    while (it.hasNext) {
-      val (fpT, nfpT) = it.next()
-      s.sql(s"DROP TABLE IF EXISTS $fpT")
-      s.sql(s"DROP TABLE IF EXISTS $nfpT")
-    }
-    fpIndexCache.clear()
-  }
-
-  /** Test hook: forget the round-15 durable staged caches (LSH base
-    * index, fuzzy pairs/base, ER labels) — the Layouts files and
-    * manifests remain, exactly what a fresh JVM sees. */
-  private[graft] def resetDurableStagesForTest(): Unit = {
-    lshBaseCache.clear()
-    fuzzyPairsCache.clear()
-    fuzzyBaseCache.clear()
-    erLabelsCache.clear()
-    subIncrCache.clear()
-    phPairsCache.clear()
-    lshPairsStageCache.clear()
-    ppjoinPairsCache.clear()
-    lshCandStageCache.clear()
-    phBaseCache.clear()
-    phLabelsCache.clear()
-  }
-
   /** Durable BUCKETED fingerprint index for incremental dedup — the q62
     * warehouse layout applied to the dedup family's production path. Two
     * catalog tables are written under `base`: `<table>_fp` (all prints,
@@ -1045,29 +963,28 @@ object DedupQueries {
     * write, catalog round-trip, bucketed distinct, and both verdict
     * joins. What q85 adds over q65 is the PLAN: zero corpus-side
     * exchanges (asserted in PlanShapeSpec), the recurring-run shape a
-    * weekly crawl ingest actually executes. The layout builds ONCE per
-    * corpus fingerprint per JVM ([[fpIndexCache]], CorpusKey-keyed) and later invocations reuse
-    * it, so what repeated runs measure is exactly the recurring verdict
-    * cost — one small-batch shuffle against the standing index. */
+    * weekly crawl ingest actually executes. The layout is DURABLE
+    * (graft.etl.Layouts): it builds ONCE per corpus fingerprint, and
+    * every later invocation — in this JVM or a new one — re-attaches it
+    * (re-registers the catalog tables over the files, zero data jobs;
+    * LayoutReattachSpec proves it), so what repeated runs measure is
+    * exactly the recurring verdict cost — one small-batch shuffle
+    * against the standing index. */
   def q85BucketedIncDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val (fpT, nfpT) = fpIndexCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ => {
-      // version string pins the layout geometry AND the corpus-slice
-      // definition: changing either misses the attach check and rebuilds
-      val m = graft.etl.Layouts.attachOrBuild(s, "fpidx",
-        "v1;nBuckets=8;corpus=doc_id%10!=7", dir, Seq("documents")) { base =>
-        val (rFp, rNfp) = writeFingerprintIndex(
-          docs.filter(col("doc_id") % 10 =!= 7), 8, base,
-          // deterministic per-dir name: stable across JVMs so an attach
-          // in one session and a build in another never collide
-          s"graft_fpidx_${graft.etl.Layouts.nameSuffix(dir)}")
-        (Seq(rFp, rNfp), base)
-      }
-      (m.regs(0).table, m.regs(1).table)
-    })
-    incrementalDedupBucketed(
-      s, fingerprints(docs.filter(col("doc_id") % 10 === 7)), fpT, nfpT)
+    // version string pins the layout geometry AND the corpus-slice
+    // definition: changing either misses the attach check and rebuilds
+    val m = graft.etl.Layouts.attachOrBuild(s, "fpidx",
+      "v1;nBuckets=8;corpus=doc_id%10!=7", dir, Seq("documents")) { base =>
+      val (rFp, rNfp) = writeFingerprintIndex(
+        docs.filter(col("doc_id") % 10 =!= 7), 8, base,
+        // deterministic per-dir name: stable across JVMs so an attach
+        // in one session and a build in another never collide
+        s"graft_fpidx_${graft.etl.Layouts.nameSuffix(dir)}")
+      (Seq(rFp, rNfp), base)
+    }
+    incrementalDedupBucketed(s, fingerprints(docs.filter(col("doc_id") % 10 === 7)),
+      m.regs(0).table, m.regs(1).table)
   }
 
   /** Paragraph-level (chunk) boilerplate dedup — the CCNet/RefinedWeb
@@ -1323,9 +1240,6 @@ object DedupQueries {
     * the staged detail (two hash-key anti/semi joins against the SMALL
     * stopped set — no winnow, no self-join). Index build is durable
     * through the Layouts registry (once per corpus ACROSS JVMs). */
-  private val subIncrCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build the standing substring-run index of `base` under `stage`:
     * `posts` (winnowed postings), `df` (per-print document frequency),
     * `detail` (df-gated base-base posting-join rows: doc_a, doc_b, off,
@@ -1431,13 +1345,11 @@ object DedupQueries {
     val delta = base.filter(col("doc_id") % 10 === 3)
       .select((-col("doc_id") - lit(1L)).as("doc_id"),
         concat(col("text"), lit(lcsPromo)).as("text"))
-    val pth = subIncrCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "subincr", "v1;k=4;w=5;cap=64", dir,
-          Seq("documents")) { stage =>
-          substringRunIndexBuild(s, base, stage, k = 4, w = 5, dfCap = 64L)
-          stage
-        })
+    val pth = graft.etl.Layouts.stage(s, "subincr", "v1;k=4;w=5;cap=64", dir,
+      Seq("documents")) { stage =>
+      substringRunIndexBuild(s, base, stage, k = 4, w = 5, dfCap = 64L)
+      stage
+    }
     substringDeltaUpdate(s, delta, pth, k = 4, w = 5, dfCap = 64L, minPrints = 5L)
   }
 
@@ -1514,20 +1426,12 @@ object DedupQueries {
     * an all-pairs cross; at production cardinality the block key widens
     * to (nation, name prefix/soundex) with the same plan. levenshtein
     * is a codegen'd built-in scoring only surviving candidates. */
-  /** One staged (nk, ka, kb) fuzzy-match pair set per corpus per JVM
-    * (the fpIndexCache idiom): q106, q176, and q177 all consume the
-    * SAME blocked banded-levenshtein candidate scan, and
-    * computeIfAbsent makes the scoring pass a once-per-corpus cost
-    * instead of once-per-query — the q85 single-index-build rule
-    * applied to entity resolution. The value is a staged parquet path;
-    * every consumer plans against a leaf scan. The cache key carries
-    * the customer parquet's part-file CorpusKey fingerprint, so regenerating
-    * a fixture in-session invalidates the staged pairs instead of
-    * silently serving stale candidates. */
-  private val fuzzyPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Blocked fuzzy candidate pairs, scored once per dir. Scores the
+  /** Blocked fuzzy candidate pairs, scored once per customer
+    * fingerprint as a durable standing layout: q106, q176, and q177 all
+    * consume the SAME blocked banded-levenshtein candidate scan, so the
+    * scoring pass is a once-per-corpus cost instead of once-per-query —
+    * the q85 single-index-build rule applied to entity resolution —
+    * and every consumer plans against a leaf scan. Scores the
     * digit suffix, not the full name: every name shares the "Customer#"
     * prefix, and edit distance is invariant under a common prefix (an
     * optimal alignment maps it to itself), so the banded DP (threshold
@@ -1552,15 +1456,13 @@ object DedupQueries {
     * deleted characters), so candidate volume is LINEAR in customers.
     * FuzzyBlockingSpec proves candidates == brute force at sf0.001. */
   private def fuzzyPairs(s: SparkSession, dir: String): DataFrame = {
-    val cacheKey = graft.CorpusKey(dir, "customer.parquet")
-    val path = fuzzyPairsCache.computeIfAbsent(cacheKey, _ =>
-      graft.etl.Layouts.stage(s, "fuzzypairs", "v1", dir, Seq("customer")) { base =>
-        fuzzyCandidates(s, dir)
-          .filter(levenshtein(col("a.sfx"), col("b.sfx"), 2) =!= -1)
-          .select(col("a.nk").as("nk"), col("a.k").as("ka"), col("b.k").as("kb"))
-          .write.mode("overwrite").parquet(s"$base/pairs")
-        s"$base/pairs"
-      })
+    val path = graft.etl.Layouts.stage(s, "fuzzypairs", "v1", dir, Seq("customer")) { base =>
+      fuzzyCandidates(s, dir)
+        .filter(levenshtein(col("a.sfx"), col("b.sfx"), 2) =!= -1)
+        .select(col("a.nk").as("nk"), col("a.k").as("ka"), col("b.k").as("kb"))
+        .write.mode("overwrite").parquet(s"$base/pairs")
+      s"$base/pairs"
+    }
     s.read.parquet(path)
   }
 
@@ -1641,9 +1543,6 @@ object DedupQueries {
     * Scale shape: recurring cost = |delta| variant rows through one
     * equi-join + levenshtein on delta-touching candidates; staged reads
     * are leaf scans. */
-  private val fuzzyBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build the standing entity-blocking index under `stage`: the base
     * slice's variant frame, its verified pair stream, and — since round
     * 15 — the base-component LABELS, the warm-start seed for q315's
@@ -1691,14 +1590,12 @@ object DedupQueries {
     * durable through the Layouts registry — built once per corpus
     * ACROSS JVMs. */
   private def fuzzyBaseStage(s: SparkSession, dir: String): String =
-    fuzzyBaseCache.computeIfAbsent(
-      graft.CorpusKey(dir, "customer.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "fuzzybase", "v2;mod=7;labels", dir,
-          Seq("customer")) { base =>
-          fuzzyIndexBuild(s,
-            Tables.customer(s, dir).filter(col("c_custkey") % 10 =!= 7), base)
-          base
-        })
+    graft.etl.Layouts.stage(s, "fuzzybase", "v2;mod=7;labels", dir,
+      Seq("customer")) { base =>
+      fuzzyIndexBuild(s,
+        Tables.customer(s, dir).filter(col("c_custkey") % 10 =!= 7), base)
+      base
+    }
 
   def q313FuzzyIncremental(s: SparkSession, dir: String): DataFrame = {
     // Round-15 optimization: the updated pair stream lands in a staging
@@ -1776,20 +1673,15 @@ object DedupQueries {
     * Singleton customers never enter the graph (only matched vertices
     * carry labels), so the output is exactly the duplicate groups. */
   /** One staged (v, lbl) component labeling of the fuzzy-match graph
-    * per corpus per JVM — the ccLabels idiom applied to the ER side:
-    * the multi-pass min-label propagation is a once-per-corpus cost,
-    * keyed on the customer parquet fingerprint like fuzzyPairsCache. */
-  private val erLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * per customer fingerprint — the ccLabels idiom applied to the ER
+    * side: the multi-pass min-label propagation is a once-per-corpus
+    * cost, durable like [[fuzzyPairs]]. */
   private def erLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = erLabelsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "customer.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "erlabels", "v1", dir, Seq("customer")) { ck =>
-          labelsOfPairs(s, fuzzyPairs(s, dir).select("ka", "kb"), ck)
-            .write.mode("overwrite").parquet(s"$ck/labels")
-          s"$ck/labels"
-        })
+    val path = graft.etl.Layouts.stage(s, "erlabels", "v1", dir, Seq("customer")) { ck =>
+      labelsOfPairs(s, fuzzyPairs(s, dir).select("ka", "kb"), ck)
+        .write.mode("overwrite").parquet(s"$ck/labels")
+      s"$ck/labels"
+    }
     s.read.parquet(path)
   }
 
@@ -2031,18 +1923,13 @@ object DedupQueries {
     * parquet leaf three times (explode, pair rollup, doc rollup)
     * instead of re-deriving the whole PPJoin subtree per consumer —
     * which tripled the plan's exchanges past the board budget. */
-  private val ppjoinPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedPpjoinPairs(s: SparkSession, dir: String): DataFrame = {
-    val p = ppjoinPairsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "ppjoinpairs", "v1;tau=0.5", dir,
-          Seq("documents")) { base =>
-          ppjoinJaccard(Tables.documents(s, dir), tau = 0.5)
-            .write.mode("overwrite").parquet(s"$base/pairs")
-          s"$base/pairs"
-        })
+    val p = graft.etl.Layouts.stage(s, "ppjoinpairs", "v1;tau=0.5", dir,
+      Seq("documents")) { base =>
+      ppjoinJaccard(Tables.documents(s, dir), tau = 0.5)
+        .write.mode("overwrite").parquet(s"$base/pairs")
+      s"$base/pairs"
+    }
     s.read.parquet(p)
   }
 
@@ -2195,37 +2082,26 @@ object DedupQueries {
     bloomDecontaminateWith(docs.filter(!benchCond), docs.filter(benchCond), bits)
   }
 
-  /** Per-JVM memo of the durable Bloom word array, keyed by corpus
-    * content fingerprint — same discipline as [[fpIndexCache]]. */
-  private val bloomBitsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  /** Test hook (LayoutReattachSpec): empty the per-JVM memo so the next
-    * invocation exercises the durable attach path a fresh JVM takes. */
-  private[graft] def resetBloomBitsForTest(): Unit = bloomBitsCache.clear()
-
   /** Attach-or-build the q207 Bloom word array as a durable layout:
     * built once per (corpus fingerprint, filter geometry), persisted as
     * a 128 KB little-endian long file under [[graft.etl.Layouts.root]],
-    * reattached by later JVMs with a single bounded file read. */
+    * and read back on every call with a single bounded file read. */
   private[graft] def stagedBloomBits(s: SparkSession, dir: String,
-                              bench: DataFrame): Array[Long] =
-    bloomBitsCache.computeIfAbsent(graft.CorpusKey(dir, "documents.parquet"), _ => {
-      val m = graft.etl.Layouts.attachOrBuild(
-        s, "bloomwords", s"v1:m=$bloomBits:k=3:slice=37/18500",
-        dir, Seq("documents")) { base =>
-        val arr = bloomWordBits(bench)
-        val bb = java.nio.ByteBuffer.allocate(8 * arr.length)
-        arr.foreach(bb.putLong)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(base, "words.bin"), bb.array())
-        (Seq.empty, s"$base/words.bin")
-      }
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(m.dataPath))
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      Array.fill(bytes.length / 8)(bb.getLong)
-    })
+                              bench: DataFrame): Array[Long] = {
+    val p = graft.etl.Layouts.stage(
+      s, "bloomwords", s"v1:m=$bloomBits:k=3:slice=37/18500",
+      dir, Seq("documents")) { base =>
+      val arr = bloomWordBits(bench)
+      val bb = java.nio.ByteBuffer.allocate(8 * arr.length)
+      arr.foreach(bb.putLong)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(base, "words.bin"), bb.array())
+      s"$base/words.bin"
+    }
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(bb.getLong)
+  }
 
   /** Bloom positions of a hex-hash column `g`: 3 disjoint 8-hex
     * windows mod m (m a power of two). */
@@ -2503,23 +2379,18 @@ object DedupQueries {
     * intersection is a pair-key semi-join between two candidate-bounded
     * frames; C(N,2) is arithmetic on one count, not a materialized
     * frame. Output is one bounded audit row, exact integers. */
-  private val lshCandStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The UNVERIFIED q22 candidate-pair frame (band-bucket expansion, before
-    * the exact-Jaccard verify) as a staged parquet leaf once per corpus
-    * fingerprint per JVM — the signature pass is a pure function of the
+    * the exact-Jaccard verify) as a durable standing layout, one build
+    * per documents fingerprint — the signature pass is a pure function of the
     * corpus, and q297 references the candidates twice (the count and the
     * truth semi-join). */
   private def stagedLshCandidates(s: SparkSession, dir: String): DataFrame = {
-    val p = lshCandStageCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "lshcand", "v1", dir,
-          Seq("documents")) { base =>
-          bucketPairs(minhashBands(s, dir), "doc_id", "doc_a", "doc_b")
-            .write.mode("overwrite").parquet(s"$base/cand")
-          s"$base/cand"
-        })
+    val p = graft.etl.Layouts.stage(s, "lshcand", "v1", dir,
+      Seq("documents")) { base =>
+      bucketPairs(minhashBands(s, dir), "doc_id", "doc_a", "doc_b")
+        .write.mode("overwrite").parquet(s"$base/cand")
+      s"$base/cand"
+    }
     s.read.parquet(p)
   }
 

@@ -80,28 +80,15 @@ object QualityFilterQueries {
       " div greatest(size(split(text, ' ')), 1) as bigint)").as("x3"),
     expr("cast(case when n_chars >= 300 then 1 else 0 end as bigint)").as("y"))
 
-  /** Staged feature frame per corpus fingerprint per JVM — the text
-    * processing is the expensive pass; the GD loop re-reads a 5-column
-    * integer parquet leaf. */
-  private val featCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: forget the durable staged feature frames (the trained
-    * weight caches stay session-local by design — they rebuild from the
-    * durable leaves in a bounded GD loop). */
-  private[graft] def resetDurableStagesForTest(): Unit = {
-    featCache.clear()
-    ngramFeatCache.clear()
-  }
-
+  /** Staged feature frame per corpus fingerprint, durable through the
+    * Layouts registry — the text processing is the expensive pass; the
+    * GD loop re-reads a 5-column integer parquet leaf. */
   private def stagedFeatures(s: SparkSession, dir: String): DataFrame = {
-    val p = featCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "qfeat", "v1", dir, Seq("documents")) { base =>
-          features(Tables.documents(s, dir))
-            .write.mode("overwrite").parquet(s"$base/feat")
-          s"$base/feat"
-        })
+    val p = graft.etl.Layouts.stage(s, "qfeat", "v1", dir, Seq("documents")) { base =>
+      features(Tables.documents(s, dir))
+        .write.mode("overwrite").parquet(s"$base/feat")
+      s"$base/feat"
+    }
     s.read.parquet(p)
   }
 
@@ -167,8 +154,10 @@ object QualityFilterQueries {
   }
 
   /** Trained weights per corpus fingerprint per JVM — training is a
-    * deterministic function of the corpus, so it is a once-per-corpus
-    * INDEX BUILD (the ivf/pq codebook idiom), shared by q205 and q206. */
+    * deterministic function of the corpus, shared by q205 and q206. The
+    * staged features are a durable layout; the weights keep an
+    * in-memory memo because each GD pass is a Spark job, unlike a
+    * layout attach. */
   private val weightsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 
@@ -289,17 +278,12 @@ object QualityFilterQueries {
     base.select((col("doc_id") +: lit(10L).as("xb") +: xs) :+ col("y"): _*)
   }
 
-  private val ngramFeatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedNgramFeatures(s: SparkSession, dir: String): DataFrame = {
-    val p = ngramFeatCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "qngfeat", "v1", dir, Seq("documents")) { base =>
-          ngramFeatures(Tables.documents(s, dir))
-            .write.mode("overwrite").parquet(s"$base/feat")
-          s"$base/feat"
-        })
+    val p = graft.etl.Layouts.stage(s, "qngfeat", "v1", dir, Seq("documents")) { base =>
+      ngramFeatures(Tables.documents(s, dir))
+        .write.mode("overwrite").parquet(s"$base/feat")
+      s"$base/feat"
+    }
     s.read.parquet(p)
   }
 
@@ -890,35 +874,31 @@ object QualityFilterQueries {
       .orderBy("pair")
   }
 
+  /** Quantization of each token's LM probability (integer picounits). */
+  private val unigramLmScale = "1e12"
+
   /** The unigram-LM standing layout: `counts` = the corpus token
     * vocabulary with frequencies, `perdoc` = each document's
     * (n_tokens, quantized LM mass) under it — both pure corpus
     * functions, durable per documents fingerprint (the bigram-LM
     * sidecar idiom). */
-  private val unigramLmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Quantization of each token's LM probability (integer picounits). */
-  private val unigramLmScale = "1e12"
-
   private def unigramLmBase(s: SparkSession, dir: String): String =
-    unigramLmCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "unigramlm", s"v1;scale=$unigramLmScale", dir,
-          Seq("documents")) { base =>
-          val tok = Tables.documents(s, dir)
-            .select(col("doc_id"), explode(expr("split(text, ' ')")).as("tok"))
-          tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
-            .write.mode("overwrite").parquet(s"$base/counts")
-          val counts = s.read.parquet(s"$base/counts")
-          val totalV = counts.agg(sum("cnt")).first().getLong(0)
-          tok.join(counts, Seq("tok"))
-            .withColumn("pq", expr(
-              s"cast(floor(cast(cnt as double) / cast($totalV as double) * $unigramLmScale) as bigint)"))
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as("n_tokens"), sum("pq").as("spq"))
-            .write.mode("overwrite").parquet(s"$base/perdoc")
-          base
-        })
+    graft.etl.Layouts.stage(s, "unigramlm", s"v1;scale=$unigramLmScale", dir,
+      Seq("documents")) { base =>
+      val tok = Tables.documents(s, dir)
+        .select(col("doc_id"), explode(expr("split(text, ' ')")).as("tok"))
+      tok.groupBy("tok").agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(s"$base/counts")
+      val counts = s.read.parquet(s"$base/counts")
+      val totalV = counts.agg(sum("cnt")).first().getLong(0)
+      tok.join(counts, Seq("tok"))
+        .withColumn("pq", expr(
+          s"cast(floor(cast(cnt as double) / cast($totalV as double) * $unigramLmScale) as bigint)"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"), sum("pq").as("spq"))
+        .write.mode("overwrite").parquet(s"$base/perdoc")
+      base
+    }
 
   /** The per-document verdict triple shared by q230 (cross-tab) and
     * q244 (kappa): v_rules / v_rep from one row-local scan, v_lm from

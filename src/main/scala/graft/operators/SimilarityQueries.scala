@@ -121,16 +121,6 @@ object SimilarityQueries {
   def q26LshCosine(s: SparkSession, dir: String): DataFrame =
     lshPairsScored(s, dir).orderBy("vec_a", "vec_b")
 
-  /** One STAGED (vec_a, vec_b, cos) near-dup pair frame per corpus per
-    * JVM (the ccLabels/fuzzyPairsCache idiom): the banded-LSH + verify
-    * subtree is ~10 exchanges live, so any query that references the
-    * pair graph more than once (q281 reads it for the edge count, the
-    * degree mass, AND the intra cells) would re-derive it per
-    * reference — staging makes every reference a leaf scan. Keyed on
-    * the embeddings CorpusKey so a fixture regen invalidates it. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The geometry-bearing durable-layout kinds the registered query
     * paths use — exposed so LayoutReattachSpec locates the layout dirs
     * without duplicating the private geometry constants. */
@@ -139,30 +129,17 @@ object SimilarityQueries {
   private[graft] def pqCbKindForTest: String =
     s"pqcb$pqM-$pqK-$pqTrainIters-$pqTrainSampleMod"
 
-  /** Test hook: forget the round-15 durable staged caches (near-dup
-    * pairs, IVF/PQ codebooks + assignments/encodes, CC labels,
-    * propagation fixpoint) — the Layouts files and manifests remain,
-    * exactly what a fresh JVM sees. */
-  private[graft] def resetDurableStagesForTest(): Unit = {
-    pairsCache.clear()
-    ivfCodebookCache.clear()
-    ivfAssignedCache.clear()
-    ivfBaseIndexCache.clear()
-    pqCodebookCache.clear()
-    pqBaseCache.clear()
-    ccLabelsCache.clear()
-    lpropConvCache.clear()
-    lpropCache.clear()
-    mmrPoolCache.clear()
-  }
-
+  /** One STAGED (vec_a, vec_b, cos) near-dup pair frame per embeddings
+    * fingerprint, durable through the Layouts registry: the banded-LSH +
+    * verify subtree is ~10 exchanges live, so any query that references
+    * the pair graph more than once (q281 reads it for the edge count,
+    * the degree mass, AND the intra cells) would re-derive it per
+    * reference — staging makes every reference a leaf scan. */
   private[graft] def stagedPairsPath(s: SparkSession, dir: String): String =
-    pairsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "embeddings.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "ndpairs", "v1", dir, Seq("embeddings")) { base =>
-          lshPairsScored(s, dir).write.mode("overwrite").parquet(s"$base/pairs")
-          s"$base/pairs"
-        })
+    graft.etl.Layouts.stage(s, "ndpairs", "v1", dir, Seq("embeddings")) { base =>
+      lshPairsScored(s, dir).write.mode("overwrite").parquet(s"$base/pairs")
+      s"$base/pairs"
+    }
 
   private[graft] def stagedPairs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(stagedPairsPath(s, dir))
@@ -551,45 +528,35 @@ object SimilarityQueries {
     * equality with q25 at nprobe=16 (all buckets searched). The oracle
     * runs the identical nprobe=1 construction so q37 matches exactly. */
   /** Staged trained-IVF-codebook and full-corpus assignment per
-    * (corpus fingerprint, training sample mod) per JVM — the
-    * pqCodebookCache idiom: both are deterministic functions of
-    * exactly that key, so Lloyd training and the assignment scan are
-    * once-per-corpus INDEX BUILDS shared by q37 and q105 instead of
-    * per-query costs. Spec paths that construct their own frames keep
-    * calling the uncached builders. */
-  private val ivfCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfAssignedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def corpusKey(dir: String, mod: Int): String =
-    s"${graft.CorpusKey(dir, "embeddings.parquet")}:$mod"
-
+    * (corpus fingerprint, training sample mod), durable through the
+    * Layouts registry — the pqCodebookCached idiom: both are
+    * deterministic functions of exactly that key, so Lloyd training and
+    * the assignment scan are once-per-corpus INDEX BUILDS shared by q37
+    * and q105 instead of per-query costs. Spec paths that construct
+    * their own frames keep calling the unstaged builders. */
   private def trainedCodebookCached(s: SparkSession, dir: String,
                                     mod: Int): DataFrame = {
     // geometry rides the KIND, not the version: the registry keeps ONE
     // active layout per (kind, source), and different sample mods are
     // live simultaneously (specs; q37 vs recall sweeps) — a shared kind
     // would ping-pong rebuilds between them
-    val p = ivfCodebookCache.computeIfAbsent(corpusKey(dir, mod), _ =>
-      graft.etl.Layouts.stage(s, s"ivfcb$mod", "v1", dir,
-        Seq("embeddings")) { base =>
-        trainedCodebook(normed(s, dir), trainSampleMod = mod)
-          .write.mode("overwrite").parquet(s"$base/cb")
-        s"$base/cb"
-      })
+    val p = graft.etl.Layouts.stage(s, s"ivfcb$mod", "v1", dir,
+      Seq("embeddings")) { base =>
+      trainedCodebook(normed(s, dir), trainSampleMod = mod)
+        .write.mode("overwrite").parquet(s"$base/cb")
+      s"$base/cb"
+    }
     s.read.parquet(p)
   }
 
   private[graft] def ivfAssigned(s: SparkSession, dir: String, mod: Int): DataFrame = {
-    val p = ivfAssignedCache.computeIfAbsent(corpusKey(dir, mod), _ =>
-      graft.etl.Layouts.stage(s, s"ivfassign$mod", "v1", dir,
-        Seq("embeddings")) { base =>
-        assign(normed(s, dir), trainedCodebookCached(s, dir, mod))
-          .select("vec_id", "v", "nrm", "centroid_id")
-          .write.mode("overwrite").parquet(s"$base/assign")
-        s"$base/assign"
-      })
+    val p = graft.etl.Layouts.stage(s, s"ivfassign$mod", "v1", dir,
+      Seq("embeddings")) { base =>
+      assign(normed(s, dir), trainedCodebookCached(s, dir, mod))
+        .select("vec_id", "v", "nrm", "centroid_id")
+        .write.mode("overwrite").parquet(s"$base/assign")
+      s"$base/assign"
+    }
     s.read.parquet(p)
   }
 
@@ -634,23 +601,19 @@ object SimilarityQueries {
     * ingest updates: codebook trained ONLY on the standing corpus
     * (vec_id % 10 != 7, q65's crawl-split convention) with the q37
     * sample/seed discipline, plus that corpus's full bucket assignment.
-    * Both staged once per corpus fingerprint per JVM (the ivfAssignedCache
-    * idiom) under one root: `cb/` and `assign/`. */
-  private val ivfBaseIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * Both staged once per corpus fingerprint (the ivfAssigned idiom)
+    * under one durable root: `cb/` and `assign/`. */
   private def ivfBaseIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val p = ivfBaseIndexCache.computeIfAbsent(corpusKey(dir, ivfTrainSampleMod), _ =>
-      graft.etl.Layouts.stage(s, "ivfbase",
-        s"v1;mod=$ivfTrainSampleMod;split=7", dir, Seq("embeddings")) { pth =>
-        val base = normed(s, dir).filter(col("vec_id") % 10 =!= 7)
-        trainedCodebook(base, trainSampleMod = ivfTrainSampleMod)
-          .write.mode("overwrite").parquet(s"$pth/cb")
-        assign(base, s.read.parquet(s"$pth/cb"))
-          .select("vec_id", "centroid_id")
-          .write.mode("overwrite").parquet(s"$pth/assign")
-        pth
-      })
+    val p = graft.etl.Layouts.stage(s, "ivfbase",
+      s"v1;mod=$ivfTrainSampleMod;split=7", dir, Seq("embeddings")) { pth =>
+      val base = normed(s, dir).filter(col("vec_id") % 10 =!= 7)
+      trainedCodebook(base, trainSampleMod = ivfTrainSampleMod)
+        .write.mode("overwrite").parquet(s"$pth/cb")
+      assign(base, s.read.parquet(s"$pth/cb"))
+        .select("vec_id", "centroid_id")
+        .write.mode("overwrite").parquet(s"$pth/assign")
+      pth
+    }
     (s.read.parquet(s"$p/cb"), s.read.parquet(s"$p/assign"))
   }
 
@@ -775,7 +738,7 @@ object SimilarityQueries {
     * so this is that risk, quantified.)
     *
     * Scale shape: cluster sizes come from the STAGED ccLabels fixpoint
-    * (once per corpus per JVM); the Gini rank rides q166's two-phase
+    * (once per corpus, durable); the Gini rank rides q166's two-phase
     * discipline — offsets from a window over size-BUCKET summaries
     * (bounded grid), intra-bucket row_number under the total
     * (n_members, cluster_id) order — never a global sort of the
@@ -819,7 +782,7 @@ object SimilarityQueries {
     * (one opt-out in a mirror cluster removes thousands).
     *
     * Scale shape: cluster labels are the STAGED ccLabels fixpoint
-    * (once per corpus per JVM — q50's substrate); the closure is one
+    * (once per corpus, durable — q50's substrate); the closure is one
     * distinct over the opted-out labels followed by one equi-join on
     * the label key — the verdict frame carries cluster ids, never
     * documents. The final rollup is bounded by |sources|. */
@@ -1242,31 +1205,23 @@ object SimilarityQueries {
     *    un-materialized subplans (no common-subexpression reuse across
     *    union branches), so each chained hop multiplied work ~4x. */
   /** One staged (v, lbl) component labeling of the LSH near-dup graph
-    * per corpus per JVM (the fuzzyPairsCache idiom): q50 and q195 both
-    * consume the SAME pairs → undirected base → min-label fixpoint
-    * chain, and computeIfAbsent makes the multi-pass propagation a
+    * per embeddings fingerprint, durable through the Layouts registry:
+    * q50 and q195 both consume the SAME pairs → undirected base →
+    * min-label fixpoint chain, so the multi-pass propagation is a
     * once-per-corpus cost instead of once-per-query (measured ~7 s per
-    * extra consumer at sf0.1). Keyed on the embeddings parquet's
-    * the part-file CorpusKey so a fixture regen invalidates staged labels.
-    * fresh() inside the builder keeps concurrent FIRST builds on
-    * disjoint dirs; computeIfAbsent serializes per key. */
-  private val ccLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * extra consumer at sf0.1). */
   private[graft] def ccLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = ccLabelsCache.computeIfAbsent(
-      graft.CorpusKey(dir, "embeddings.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "cclabels", "v1", dir, Seq("embeddings")) { ck =>
-          // the shared staged pair frame IS the pairs stage (one LSH
-          // derivation per corpus even when both consumers run); the
-          // undirected+self-loop staging and the propagation are
-          // DedupQueries.labelsOfPairs — one copy of the labeling shape
-          DedupQueries.labelsOfPairs(s,
-              stagedPairs(s, dir)
-                .select(col("vec_a").as("ka"), col("vec_b").as("kb")), ck)
-            .write.mode("overwrite").parquet(s"$ck/labels")
-          s"$ck/labels"
-        })
+    val path = graft.etl.Layouts.stage(s, "cclabels", "v1", dir, Seq("embeddings")) { ck =>
+      // the shared staged pair frame IS the pairs stage (one LSH
+      // derivation per corpus even when both consumers run); the
+      // undirected+self-loop staging and the propagation are
+      // DedupQueries.labelsOfPairs — one copy of the labeling shape
+      DedupQueries.labelsOfPairs(s,
+          stagedPairs(s, dir)
+            .select(col("vec_a").as("ka"), col("vec_b").as("kb")), ck)
+        .write.mode("overwrite").parquet(s"$ck/labels")
+      s"$ck/labels"
+    }
     s.read.parquet(path)
   }
 
@@ -1606,19 +1561,14 @@ object SimilarityQueries {
     * encode itself. The sample predicate is a plan-time literal mirrored
     * verbatim in the oracle, so the codebook — and therefore every code,
     * ADC score, and shortlist — stays bit-equal across engines. */
-  /** Staged trained-PQ-codebook path per (corpus fingerprint, geometry)
-    * per JVM — see the staging note inside [[pqTopk]]. */
-  private val pqCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the trained PQ codebook through parquet: it is k*m rows but
     * its LINEAGE is trainIters unrolled assign+recenter rounds, and the
     * plan references it twice (corpus encode + probe ADC table) —
     * unstaged, every trial re-optimizes and re-executes that whole
     * subtree per reference (the q86/q95 branch-point rule). The write
     * costs one tiny job; both consumers then read a leaf scan. The
-    * staged path caches per (corpus fingerprint, training geometry) per
-    * JVM — the fuzzyPairs/ccLabels idiom: the codebook is a
+    * staged codebook is a durable layout per (corpus fingerprint,
+    * training geometry) — the fuzzyPairs/ccLabels idiom: it is a
     * deterministic function of exactly that key, so Lloyd training is a
     * once-per-corpus INDEX BUILD, not a per-query cost (a production
     * PQ index trains once and serves queries for months). Shared by
@@ -1626,17 +1576,14 @@ object SimilarityQueries {
   private def pqCodebookCached(s: SparkSession, dir: String, e: DataFrame,
                                m: Int, k: Int, trainIters: Int,
                                trainSampleMod: Int): DataFrame = {
-    val key = graft.CorpusKey(dir, "embeddings.parquet") +
-      s":$m:$k:$trainIters:$trainSampleMod"
     // geometry in the KIND (one active layout per kind): q71/q212 and the
     // recall/ablation specs hold several training geometries live at once
-    val p = pqCodebookCache.computeIfAbsent(key, _ =>
-      graft.etl.Layouts.stage(s, s"pqcb$m-$k-$trainIters-$trainSampleMod",
-        "v1", dir, Seq("embeddings")) { base =>
-        trainPqCodebook(e, m, k, trainIters, trainSampleMod)
-          .write.mode("overwrite").parquet(s"$base/cb")
-        s"$base/cb"
-      })
+    val p = graft.etl.Layouts.stage(s, s"pqcb$m-$k-$trainIters-$trainSampleMod",
+      "v1", dir, Seq("embeddings")) { base =>
+      trainPqCodebook(e, m, k, trainIters, trainSampleMod)
+        .write.mode("overwrite").parquet(s"$base/cb")
+      s"$base/cb"
+    }
     s.read.parquet(p)
   }
 
@@ -1740,22 +1687,17 @@ object SimilarityQueries {
     * Scale shape: recurring cost = |delta| × pqM narrow code rows through
     * one broadcast argmin + a leaf scan of the staged codes (pqM bytes a
     * vector); both trained structures are once-per-corpus index builds. */
-  private val pqBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q312PqIncremental(s: SparkSession, dir: String): DataFrame = {
-    val pth = pqBaseCache.computeIfAbsent(
-      corpusKey(dir, pqTrainSampleMod) + s":pq$pqM:$pqK", _ =>
-        graft.etl.Layouts.stage(s, "pqbase",
-          s"v1;m=$pqM;k=$pqK;mod=$pqTrainSampleMod;split=7", dir,
-          Seq("embeddings")) { p =>
-          val base = normed(s, dir).filter(col("vec_id") % 10 =!= 7)
-          trainPqCodebook(base).write.mode("overwrite").parquet(s"$p/cb")
-          pqAssign(pqSubsOf(base), s.read.parquet(s"$p/cb"))
-            .select("vec_id", "m", "code")
-            .write.mode("overwrite").parquet(s"$p/enc")
-          p
-        })
+    val pth = graft.etl.Layouts.stage(s, "pqbase",
+      s"v1;m=$pqM;k=$pqK;mod=$pqTrainSampleMod;split=7", dir,
+      Seq("embeddings")) { p =>
+      val base = normed(s, dir).filter(col("vec_id") % 10 =!= 7)
+      trainPqCodebook(base).write.mode("overwrite").parquet(s"$p/cb")
+      pqAssign(pqSubsOf(base), s.read.parquet(s"$p/cb"))
+        .select("vec_id", "m", "code")
+        .write.mode("overwrite").parquet(s"$p/enc")
+      p
+    }
     val cb = s.read.parquet(s"$pth/cb")
     val deltaEnc = pqAssign(
       pqSubsOf(normed(s, dir).filter(col("vec_id") % 10 === 7)), cb)
@@ -2442,9 +2384,6 @@ object SimilarityQueries {
       .orderBy("probe_id", "rank")
   }
 
-  private val mmrPoolCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q294 — MMR DIVERSIFIED RERANK (maximal marginal relevance, Carbonell &
     * Goldstein 1998): from each probe's top-8 shortlist by exact integer
     * dot, greedily select 4 results maximizing 2·MMR = rel − max_{s∈sel}
@@ -2465,22 +2404,20 @@ object SimilarityQueries {
     * step 2 on, scores are provably non-increasing (the selected-set max
     * only grows), which ServingWaveSpec pins. */
   def q294MmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val poolPath = mmrPoolCache.computeIfAbsent(
-      graft.CorpusKey(dir, "embeddings.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "mmrpool", "v1;probes=4;top=8", dir,
-          Seq("embeddings")) { base =>
-          val e = quantized(s, dir)
-          val probes = e.filter(col("vec_id") < 4)
-            .select(col("vec_id").as("probe_id"), col("dv").as("pv"))
-          val wRel = Window.partitionBy("probe_id").orderBy(desc("rel"), asc("vec_id"))
-          e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-            .withColumn("rel", expr("cast(graft_dot(pv, dv) as bigint)"))
-            .withColumn("rn", row_number().over(wRel))
-            .filter(col("rn") <= 8)
-            .select("probe_id", "vec_id", "rel", "dv")
-            .write.mode("overwrite").parquet(s"$base/pool")
-          s"$base/pool"
-        })
+    val poolPath = graft.etl.Layouts.stage(s, "mmrpool", "v1;probes=4;top=8", dir,
+      Seq("embeddings")) { base =>
+      val e = quantized(s, dir)
+      val probes = e.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("probe_id"), col("dv").as("pv"))
+      val wRel = Window.partitionBy("probe_id").orderBy(desc("rel"), asc("vec_id"))
+      e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+        .withColumn("rel", expr("cast(graft_dot(pv, dv) as bigint)"))
+        .withColumn("rn", row_number().over(wRel))
+        .filter(col("rn") <= 8)
+        .select("probe_id", "vec_id", "rel", "dv")
+        .write.mode("overwrite").parquet(s"$base/pool")
+      s"$base/pool"
+    }
     val shortlist = s.read.parquet(poolPath)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -2600,9 +2537,6 @@ object SimilarityQueries {
     * is one edge-to-labels equi-join + a partial-aggregating (node,
     * label) count + a per-node argmax window over the bounded vote
     * frame. */
-  private val lpropCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q302LabelPropagation(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.embeddings(s, dir).select(col("vec_id").as("node"))
     val seeds = Tables.embeddings(s, dir).filter(col("vec_id") < 100)
@@ -2621,15 +2555,13 @@ object SimilarityQueries {
         .select("node", "lbl")
         .join(labeled.select("node"), Seq("node"), "left_anti")
     }
-    val base = lpropCache.computeIfAbsent(
-      graft.CorpusKey(dir, "embeddings.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "lprop2round", "v1", dir,
-          Seq("embeddings")) { b =>
-          adopt(seeds).write.mode("overwrite").parquet(s"$b/r1")
-          adopt(seeds.unionByName(s.read.parquet(s"$b/r1")))
-            .write.mode("overwrite").parquet(s"$b/r2")
-          b
-        })
+    val base = graft.etl.Layouts.stage(s, "lprop2round", "v1", dir,
+      Seq("embeddings")) { b =>
+      adopt(seeds).write.mode("overwrite").parquet(s"$b/r1")
+      adopt(seeds.unionByName(s.read.parquet(s"$b/r1")))
+        .write.mode("overwrite").parquet(s"$b/r2")
+      b
+    }
     val r1 = s.read.parquet(s"$base/r1")
     val r2 = s.read.parquet(s"$base/r2")
     val l2 = seeds.unionByName(r1).unionByName(r2)
@@ -2713,23 +2645,18 @@ object SimilarityQueries {
     * argmax window over the bounded vote frame, one anti-join; the
     * stopping count rides the write job (no extra action). Pass count
     * is the graph's frontier depth, the same bound a BFS pays. */
-  private val lpropConvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def q310PropagationConverged(s: SparkSession, dir: String): DataFrame = {
-    val finDir = lpropConvCache.computeIfAbsent(
-      graft.CorpusKey(dir, "embeddings.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "lpropconv", "v1", dir,
-          Seq("embeddings")) { base =>
-          val seeds = Tables.embeddings(s, dir).filter(col("vec_id") < 100)
-            .select(col("vec_id").as("node"), col("label").cast("bigint").as("lbl"))
-          val pairs = stagedPairs(s, dir)
-          val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-            .unionAll(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-          // the manifest records whichever rotating leaf the fixpoint
-          // landed on; the loser dir stays as bounded dead weight
-          propagateConverged(s, seeds, edges, base)
-        })
+    val finDir = graft.etl.Layouts.stage(s, "lpropconv", "v1", dir,
+      Seq("embeddings")) { base =>
+      val seeds = Tables.embeddings(s, dir).filter(col("vec_id") < 100)
+        .select(col("vec_id").as("node"), col("label").cast("bigint").as("lbl"))
+      val pairs = stagedPairs(s, dir)
+      val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
+        .unionAll(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      // the manifest records whichever rotating leaf the fixpoint
+      // landed on; the loser dir stays as bounded dead weight
+      propagateConverged(s, seeds, edges, base)
+    }
     val fin = s.read.parquet(finDir)
     val all = Tables.embeddings(s, dir).select(col("vec_id").as("node"))
     val byLabel = fin.groupBy("lbl")

@@ -417,63 +417,28 @@ object TextAnalysisQueries {
           lit(" " + r.replace(" ", "") + " ")), lit("  "), lit(" ")))
     }
 
-  /** Trained merge rules per corpus fingerprint per JVM — training is
-    * a deterministic function of the corpus, so it is a once-per-corpus
-    * INDEX BUILD (the q205 weightsCache idiom); shared by the encode
-    * consumers q144/q241 so repeated scoring runs pay the 3-round train
-    * once. The rules are a bounded driver scalar (one short string per
-    * round) — the q19 mirror class, independent of corpus size. */
-  private val bpeRulesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
-  /** The standing corpus's FULL unigram gram-count table per corpus
-    * fingerprint per JVM — durable through the Layouts registry (q321);
-    * the map only memoizes the staged path. */
-  private val unigramBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The corpus's segmented distinct-word frame (the unigram E-step) per
-    * corpus fingerprint per JVM — durable through the Layouts registry;
-    * shared by q319 (usage counts) and q320 (round-0 numbers + usage),
-    * so the path fold runs once per corpus, not per consumer. */
-  private val unigramSegCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The corpus's full gram-count table per corpus fingerprint per JVM
-    * — durable through the Layouts registry; the one corpus-scale pass
-    * every unigram query (q318–q320, stagedSegmented's build) shares. */
-  private val unigramFullCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: forget the durable trained-rules, gram-count and
-    * segmentation caches (the Layouts files and manifests remain,
-    * exactly what a fresh JVM sees). */
-  private[graft] def resetDurableStagesForTest(): Unit = {
-    bpeRulesCache.clear()
-    unigramBaseCache.clear()
-    unigramSegCache.clear()
-    unigramFullCache.clear()
+  /** Trained merge rules per corpus fingerprint — training is a
+    * deterministic function of the corpus, so it is a once-per-corpus
+    * INDEX BUILD, durable through the Layouts registry: the rules land
+    * as a newline-joined text file next to the manifest, and every call
+    * re-reads that file instead of re-running the 3-round train. Shared
+    * by the encode consumers q144/q241. The rules are a bounded driver
+    * scalar (one short string per round) — the q19 mirror class,
+    * independent of corpus size. */
+  private def trainedBpeRules(s: SparkSession, dir: String): Array[String] = {
+    val p = graft.etl.Layouts.stage(s, "bperules", "v1;rounds=3", dir,
+      Seq("documents")) { base =>
+      val rules = bpeTrainRounds(Tables.documents(s, dir), 3)
+        .orderBy("round").select("pair").collect().map(_.getString(0))
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(base, "rules.txt"),
+        rules.mkString("\n").getBytes("UTF-8"))
+      s"$base/rules.txt"
+    }
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), "UTF-8")
+      .split("\n", -1).filter(_.nonEmpty)
   }
-
-  private def trainedBpeRules(s: SparkSession, dir: String): Array[String] =
-    bpeRulesCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ => {
-        // durable through the Layouts registry (round 15): the trained
-        // rules land as a newline-joined text file next to the manifest,
-        // so a later JVM attaches instead of re-running the 3-round train
-        val p = graft.etl.Layouts.stage(s, "bperules", "v1;rounds=3", dir,
-          Seq("documents")) { base =>
-          val rules = bpeTrainRounds(Tables.documents(s, dir), 3)
-            .orderBy("round").select("pair").collect().map(_.getString(0))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(base, "rules.txt"),
-            rules.mkString("\n").getBytes("UTF-8"))
-          s"$base/rules.txt"
-        }
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8")
-          .split("\n", -1).filter(_.nonEmpty)
-      })
 
   def q144BpeEncode(s: SparkSession, dir: String): DataFrame = {
     val rules = trainedBpeRules(s, dir)
@@ -1415,13 +1380,11 @@ object TextAnalysisQueries {
     * branch (measured 1.4 → 3.5 s on q318 when this briefly regressed),
     * while the staged leaf is gram-table-sized. */
   private def fullCountsStaged(s: SparkSession, dir: String): DataFrame = {
-    val pth = unigramFullCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "ugcnts", "v1", dir, Seq("documents")) { ck =>
-          fullGramCounts(Tables.documents(s, dir))
-            .write.mode("overwrite").parquet(s"$ck/cnts")
-          s"$ck/cnts"
-        })
+    val pth = graft.etl.Layouts.stage(s, "ugcnts", "v1", dir, Seq("documents")) { ck =>
+      fullGramCounts(Tables.documents(s, dir))
+        .write.mode("overwrite").parquet(s"$ck/cnts")
+      s"$ck/cnts"
+    }
     s.read.parquet(pth)
   }
 
@@ -1567,17 +1530,15 @@ object TextAnalysisQueries {
     * corpus, so it is a once-per-corpus index build shared by q319 and
     * q320 — the same discipline as the trained BPE rules above. */
   private def stagedSegmented(s: SparkSession, dir: String): DataFrame = {
-    val pth = unigramSegCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        // the version pins the vocabulary geometry (the top-16 cut):
-        // changing the cut must miss this attach check, or q319/q320
-        // would serve an E-step computed under the old vocabulary
-        graft.etl.Layouts.stage(s, "ugseg", "v1;top=16", dir, Seq("documents")) { ck =>
-          val words = unigramWords(s, dir)
-          unigramSegmented(words, unigramMaps(unigramGrams(s, dir)))
-            .write.mode("overwrite").parquet(s"$ck/seg")
-          s"$ck/seg"
-        })
+    // the version pins the vocabulary geometry (the top-16 cut):
+    // changing the cut must miss this attach check, or q319/q320
+    // would serve an E-step computed under the old vocabulary
+    val pth = graft.etl.Layouts.stage(s, "ugseg", "v1;top=16", dir, Seq("documents")) { ck =>
+      val words = unigramWords(s, dir)
+      unigramSegmented(words, unigramMaps(unigramGrams(s, dir)))
+        .write.mode("overwrite").parquet(s"$ck/seg")
+      s"$ck/seg"
+    }
     s.read.parquet(pth)
   }
 
@@ -1689,14 +1650,12 @@ object TextAnalysisQueries {
     * trainer's statistics update at delta cost like every other
     * standing index. */
   def q321UnigramIncremental(s: SparkSession, dir: String): DataFrame = {
-    val pth = unigramBaseCache.computeIfAbsent(
-      graft.CorpusKey(dir, "documents.parquet"), _ =>
-        graft.etl.Layouts.stage(s, "uggrams", "v1;mod=7", dir, Seq("documents")) { ck =>
-          fullGramCounts(
-              Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7))
-            .write.mode("overwrite").parquet(s"$ck/grams")
-          s"$ck/grams"
-        })
+    val pth = graft.etl.Layouts.stage(s, "uggrams", "v1;mod=7", dir, Seq("documents")) { ck =>
+      fullGramCounts(
+          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7))
+        .write.mode("overwrite").parquet(s"$ck/grams")
+      s"$ck/grams"
+    }
     // the merged table lands in a staging leaf ONCE (the q311 eager
     // staging-write discipline): the cut branches and the total then read
     // a vocab-bounded parquet instead of re-deriving the delta count per

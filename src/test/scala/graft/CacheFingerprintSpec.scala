@@ -2,18 +2,27 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 cache-key discipline: every per-JVM staged-index cache keys
-  * on graft.CorpusKey — a part-file-level fingerprint (max mtime + total
-  * bytes + file count + sorted-name hash) — so an IN-SESSION fixture
-  * regeneration can never serve stale staged state. The round-10 holes
-  * this closes: fpIndexCache (q85) and Zorder.layouts keyed on the BARE
-  * dir (any regen was invisible for the JVM lifetime), and the other
-  * five caches keyed on the parquet DIRECTORY's own mtime:length, which
-  * is 1-second-granular and size-blind. The name hash carries Spark's
-  * per-job part-file UUIDs, so even a same-second, same-byte-count
-  * rewrite misses. */
+/** Cache-key discipline: every standing index is a graft.etl.Layouts
+  * entry whose attach check is graft.CorpusKey — a part-file-level
+  * fingerprint (max mtime + total bytes + file count + sorted-name
+  * hash) — and no call site memoizes around it, so an IN-SESSION
+  * fixture regeneration can never serve stale staged state. The holes
+  * this closes: per-JVM memos keyed on the BARE dir (q85's fingerprint
+  * index, the Z-order layout, q62's bucketed pair — any regen was
+  * invisible for the JVM lifetime), and keys on the parquet DIRECTORY's
+  * own mtime:length, which is 1-second-granular and size-blind. The
+  * name hash carries Spark's per-job part-file UUIDs, so even a
+  * same-second, same-byte-count rewrite misses. */
 class CacheFingerprintSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
+
+  /** Drop the catalog tables a throwaway dir's layouts registered, so
+    * later suites see only the tables of the dirs they query. */
+  private def dropTablesOf(dir: String): Unit = {
+    val suffix = etl.Layouts.nameSuffix(dir)
+    spark.catalog.listTables().collect().map(_.name).filter(_.contains(suffix))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 
   test("CorpusKey fails loudly on a missing source") {
     val e = intercept[IllegalArgumentException] {
@@ -95,6 +104,33 @@ class CacheFingerprintSpec extends AnyFunSuite {
     val r2 = SparkEntry.queries("q85_bucketed_dedup")(spark, dir).count()
     val expected = docs.filter("doc_id % 2 = 0 and doc_id % 10 = 7").count()
     assert(r2 == expected && r2 != r1,
-      "fpIndexCache must miss on the regenerated corpus, not serve stale")
+      "the fingerprint index must miss on the regenerated corpus, not serve stale")
+    dropTablesOf(dir)
+  }
+
+  test("q62 bucketed pair rebuilds after an in-session regen") {
+    import org.apache.spark.sql.functions._
+    val dir = Staging.fresh("ckbkt")
+    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    val customer = spark.read.parquet(s"$sfDir/customer.parquet")
+    orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    customer.write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    def q62(): Seq[(String, Long, Double)] =
+      SparkEntry.queries("q62_bucketed_join")(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val r1 = q62()
+    // regenerate with half the orders: a stale layout would keep serving r1
+    val half = orders.filter("o_orderkey % 2 = 0")
+    half.write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val r2 = q62()
+    val expected = half.join(customer, col("o_custkey") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).cast("bigint"),
+        sum(col("o_totalprice").cast("decimal(18,6)")).cast("double"))
+      .orderBy("c_mktsegment").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(r2 == expected && r2 != r1,
+      "the bucketed pair must miss on the regenerated orders, not serve stale")
+    dropTablesOf(dir)
   }
 }

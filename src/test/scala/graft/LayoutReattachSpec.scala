@@ -5,10 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The layouts survive the JVM (round-9 registry, graft.etl.Layouts):
-  * a "new session" — per-JVM caches emptied, catalog entries dropped,
-  * exactly the state a fresh JVM starts in; the durable files and
-  * manifest are what persist — must serve the same queries by
-  * RE-ATTACHING the existing layout, running ZERO rebuild jobs. The
+  * a "new session" — catalog entries dropped, exactly the state a fresh
+  * JVM starts in (Layouts keeps no in-memory state, and no call site
+  * memoizes around it); the durable files and manifest are what
+  * persist — must serve the same queries by RE-ATTACHING the existing
+  * layout, running ZERO rebuild jobs. The
   * no-rebuild proof is a byte-level snapshot of the layout dir (every
   * file's path, size, mtime): any write job would touch it. Staleness is
   * also proven: corrupting the recorded source fingerprint must force a
@@ -26,6 +27,16 @@ class LayoutReattachSpec extends AnyFunSuite {
     finally stream.close()
   }
 
+  private def manifestLines(base: String): List[String] =
+    Files.readAllLines(Paths.get(base, "_graft_manifest")).asScala.toList
+
+  /** Simulate a fresh JVM's catalog: drop the tables the manifest names
+    * (the durable files and manifest remain). */
+  private def dropManifestTables(base: String): Unit =
+    manifestLines(base).map(_.split("\t", -1)).collect {
+      case Array("reg", table, _*) => table
+    }.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
   test("q85 fingerprint index re-attaches across sessions with zero rebuild jobs") {
     val r1 = SparkEntry.queries("q85_bucketed_dedup")(spark, sfDir).collect()
     val base = etl.Layouts.baseFor("fpidx", sfDir)
@@ -33,7 +44,7 @@ class LayoutReattachSpec extends AnyFunSuite {
       "the build must leave a manifest")
     val before = snapshot(base)
 
-    operators.DedupQueries.resetFpIndexForTest(spark)
+    dropManifestTables(base)
     assert(spark.catalog.listTables().collect()
       .forall(!_.name.startsWith("graft_fpidx_")), "catalog reset failed")
 
@@ -54,7 +65,7 @@ class LayoutReattachSpec extends AnyFunSuite {
     val base = etl.Layouts.baseFor("bktoc", sfDir)
     val before = snapshot(base)
 
-    operators.EtlQueries.resetBucketPairForTest(spark)
+    dropManifestTables(base)
     val r2 = SparkEntry.queries("q62_bucketed_join")(spark, sfDir).collect()
     assert(r2.toSeq == r1.toSeq)
     assert(snapshot(base) == before)
@@ -106,29 +117,23 @@ class LayoutReattachSpec extends AnyFunSuite {
       "the word file is the 128 KB packed filter, independent of corpus size")
     val before = snapshot(base)
 
-    operators.DedupQueries.resetBloomBitsForTest()
     val r2 = SparkEntry.queries("q207_bloom_decontaminate")(spark, sfDir).collect()
     assert(r2.toSeq == r1.toSeq, "the attached filter must serve identical verdicts")
     assert(snapshot(base) == before,
       "attach must reuse the standing word file (the bench-side fold never re-runs)")
   }
 
-  /** Round-15 durable staged caches: run the query once (cold build under
-    * the Layouts root), snapshot the layout dir, clear every in-JVM map
-    * (a fresh JVM's state), re-run, and require identical results with
-    * not one layout file touched. One helper covers the whole family. */
+  /** Round-15 durable staged layouts: run the query once (cold build
+    * under the Layouts root), snapshot the layout dir, re-run — with no
+    * in-JVM memo the second call takes the same attach path a fresh JVM
+    * takes — and require identical results with not one layout file
+    * touched. One helper covers the whole family. */
   private def assertReattaches(query: String, kinds: Seq[String]): Unit = {
     val r1 = SparkEntry.queries(query)(spark, sfDir).collect()
     val bases = kinds.map(k => etl.Layouts.baseFor(k, sfDir))
     bases.foreach(b => assert(Files.exists(Paths.get(b, "_graft_manifest")),
       s"$query must leave a manifest under $b"))
     val before = bases.map(snapshot)
-
-    operators.DedupQueries.resetDurableStagesForTest()
-    operators.SimilarityQueries.resetDurableStagesForTest()
-    operators.QualityFilterQueries.resetDurableStagesForTest()
-    operators.TextAnalysisQueries.resetDurableStagesForTest()
-    operators.CorpusQueries.resetDurableStagesForTest()
 
     val r2 = SparkEntry.queries(query)(spark, sfDir).collect()
     assert(r2.toSeq == r1.toSeq,
@@ -235,6 +240,60 @@ class LayoutReattachSpec extends AnyFunSuite {
       s"three regens must leave the current + one grace generation, got $gens")
   }
 
+  test("two concurrent first builds publish one builder's complete generation") {
+    // Layouts keeps no in-memory state, so two threads racing one kind
+    // and source model two JVMs racing one durable root
+    import spark.implicits._
+    val src = graft.Staging.fresh("racesrc")
+    (0L until 10L).toDF("id").write.mode("overwrite").parquet(s"$src/t.parquet")
+    val base = etl.Layouts.baseFor("raceprobe", src)
+    assert(!Files.exists(Paths.get(base)), "a fresh source must start with no layout")
+    val inBuild = new java.util.concurrent.CountDownLatch(2)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def stage(name: String): String =
+      etl.Layouts.stage(spark, "raceprobe", "v1", src, Seq("t")) { gen =>
+        builds.incrementAndGet()
+        inBuild.countDown()
+        // both builders are inside `build` before either writes a file
+        assert(inBuild.await(30, java.util.concurrent.TimeUnit.SECONDS),
+          "the other builder never entered build")
+        (1 to 3).foreach(i => Files.writeString(Paths.get(gen, s"$name-$i"), name))
+        gen
+      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try Seq("a", "b")
+      .map(n => pool.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = stage(n)
+      }))
+      .foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    finally pool.shutdownNow()
+    assert(builds.get === 2, "both racers must have built")
+
+    val data = manifestLines(base).collectFirst {
+      case l if l.startsWith("data\t") => l.stripPrefix("data\t")
+    }.getOrElse(fail("the manifest names no data path"))
+    val files = {
+      val ls = Files.list(Paths.get(data))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    }
+    assert(Seq("a", "b").map(n => (1 to 3).map(i => s"$n-$i").toSet).contains(files),
+      s"the published generation must hold exactly one builder's files, got $files")
+
+    val before = snapshot(base)
+    assert(stage("c") === data, "a third call must attach the published generation")
+    assert(builds.get === 2 && snapshot(base) == before,
+      "the third call must attach without a rebuild")
+    val manifests = {
+      val ls = Files.list(Paths.get(base))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_graft_manifest")).toList
+      finally ls.close()
+    }
+    assert(manifests === List("_graft_manifest"),
+      s"no manifest temp file may be left behind, got $manifests")
+  }
+
   test("the unigram E-step re-attaches for both its consumers (q319, q320)") {
     assertReattaches("q319_unigram_em", Seq("ugseg", "ugcnts"))
     assertReattaches("q320_unigram_em_eval", Seq("ugseg", "ugcnts"))
@@ -293,7 +352,6 @@ class LayoutReattachSpec extends AnyFunSuite {
       if (l.startsWith("fingerprint\t")) "fingerprint\tdeadbeef" else l
     }.mkString("\n")
     Files.writeString(mf, doctored)
-    operators.DedupQueries.resetDurableStagesForTest()
     SparkEntry.queries("q311_lsh_incremental")(spark, sfDir).collect()
     assert(snapshot(base) != before,
       "a stale fingerprint must trigger a rebuild of the staged index")
@@ -304,7 +362,6 @@ class LayoutReattachSpec extends AnyFunSuite {
     val base = etl.Layouts.baseFor("zorder", sfDir)
     val before = snapshot(base)
 
-    etl.Zorder.resetCacheForTest()
     val r2 = SparkEntry.queries("q109_zorder_scan")(spark, sfDir).collect()
     assert(r2.toSeq == r1.toSeq)
     assert(snapshot(base) == before, "attach must reuse the layout files")
@@ -316,7 +373,6 @@ class LayoutReattachSpec extends AnyFunSuite {
       if (l.startsWith("fingerprint\t")) "fingerprint\tdeadbeef" else l
     }.mkString("\n")
     Files.writeString(mf, doctored)
-    etl.Zorder.resetCacheForTest()
     val r3 = SparkEntry.queries("q109_zorder_scan")(spark, sfDir).collect()
     assert(r3.toSeq == r1.toSeq)
     assert(snapshot(base) != before, "a stale fingerprint must trigger a rebuild")
