@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
@@ -36,10 +36,11 @@ import scala.jdk.CollectionConverters._
   * The object holds no in-memory state, so two concurrent first builds
   * (two threads or two JVMs) are made safe through the file system:
   * each build writes its own nonce-named generation dir, and the
-  * manifest is written to a temp file and published by an atomic
-  * rename, so the manifest always names one builder's complete file
-  * set (last publisher wins; a crashed or in-flight build never
-  * attaches). Both racing builders pay the build. */
+  * manifest lands through `Warehouse.publish` — the helper every
+  * registry file lands through — as an atomic replace, so the manifest
+  * always names one builder's complete file set (last publisher wins; a
+  * crashed or in-flight build never attaches). Both racing builders pay
+  * the build. */
 object Layouts {
 
   /** Durable root (NOT swept at JVM exit — contrast graft.Staging).
@@ -111,13 +112,8 @@ object Layouts {
       s"fingerprint\t${m.fingerprint}", s"data\t${m.dataPath}") ++
       m.regs.map(r =>
         s"reg\t${r.table}\t${r.path}\t${r.nBuckets}\t${r.key}\t${r.schemaDdl}")
-    Files.createDirectories(Paths.get(base))
-    // publish by rename: a reader sees the previous manifest or this one,
-    // never a partial file, and two racing publishers leave exactly one
-    val tmp = Paths.get(base, s"_graft_manifest.${java.util.UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, lines.mkString("\n"))
-    Files.move(tmp, manifestPath(base),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Warehouse.publish(new org.apache.hadoop.fs.Path(manifestPath(base).toUri),
+      lines.mkString("\n"), exclusive = false)
   }
 
   private def readManifest(base: String): Option[Manifest] = {

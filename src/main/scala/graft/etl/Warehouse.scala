@@ -86,33 +86,49 @@ object Warehouse {
                     value: String): DataFrame =
     s.read.parquet(path).where(col(partCol) === value)
 
-  // ------------------------------------------------- file-manifest verbs
+  // ---------------------------------------------- versioned snapshot log
 
-  /** The Layouts-manifest discipline taken to FILE granularity: a lake
-    * root carries `_graft_files` — the sorted relative paths of its live
-    * data files, written at commit time. Readers resolve the manifest
-    * (the lakehouse-log convention: a reader trusts the log, never the
-    * directory listing), so aborted-ingest leftovers are invisible to
-    * queries and VACUUM can reclaim them from storage without a read
-    * ever racing the sweep. At 100 TB the directory listing itself is
-    * the thing you cannot trust — object stores surface half-committed
-    * multipart uploads and speculative task attempts as real objects. */
-  private val fileManifestName = "_graft_files"
+  /** The lake's registry is its log — the lakehouse-log convention
+    * (Delta/Iceberg): every commit publishes one immutable, monotonically
+    * numbered entry `_graft_log/NNNNNNNN.manifest`, and the lake's HEAD is
+    * its newest entry, taken from one listing of the log. An entry's
+    * lines are the version's live data files (relative paths), then its
+    * active delete sidecars (`_dv/…`; no data file's relative path starts
+    * with `_`, because listDataFiles skips `_` names). Readers resolve an
+    * entry, never the directory listing, so aborted-ingest leftovers are
+    * invisible to queries and VACUUM can reclaim them from storage
+    * without a read ever racing the sweep. At 100 TB the directory
+    * listing itself is the thing you cannot trust — object stores surface
+    * half-committed multipart uploads and speculative task attempts as
+    * real objects.
+    *
+    * Data files are immutable once written; a rewrite ADDS new files and
+    * drops the replaced ones from the new entry only (copy-on-write), so
+    * every retained version stays byte-readable — time travel,
+    * change-data-feed at changed-file granularity, and safe concurrent
+    * readers all fall out of the same discipline. Physical reclamation
+    * happens only at VACUUM, whose live set is the UNION of every retained
+    * entry, and only after `expireSnapshots` has dropped a version from
+    * the log. */
+  private val logDirName = "_graft_log"
+  private val dvPrefix = "_dv/"
 
-  /** All file-manifest verbs speak `org.apache.hadoop.fs.FileSystem`,
-    * not `java.io.File` — the same ruling as the CorpusKey/Layouts walk:
-    * the object-store argument in the scaladoc above only holds when the
-    * implementation resolves the path's own scheme (s3a://, hdfs://,
-    * file://). The conf comes from the active session when one exists
-    * (so fs.* overrides apply), else a default Configuration — these
-    * verbs are also called from non-Spark maintenance contexts. */
+  /** All log verbs speak `org.apache.hadoop.fs.FileSystem`, not
+    * `java.io.File` — the same ruling as the CorpusKey/Layouts walk: the
+    * object-store argument above only holds when the implementation
+    * resolves the path's own scheme (s3a://, hdfs://, file://). The conf
+    * comes from the active session when one exists (so fs.* overrides
+    * apply), else a default Configuration — these verbs are also called
+    * from non-Spark maintenance contexts. The returned path is qualified,
+    * so its scheme names the store it resolved to. */
   private def fsFor(path: String): (org.apache.hadoop.fs.FileSystem,
                                     org.apache.hadoop.fs.Path) = {
     val conf = SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(conf), p)
+    val fs = p.getFileSystem(conf)
+    (fs, fs.makeQualified(p))
   }
 
   private def listDataFiles(path: String): Seq[String] = {
@@ -137,13 +153,6 @@ object Warehouse {
     out.result().sorted
   }
 
-  private def writeTextFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path, body: String): Unit = {
-    val outStream = fs.create(p, true)
-    try outStream.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally outStream.close()
-  }
-
   private def readTextLines(fs: org.apache.hadoop.fs.FileSystem,
                             p: org.apache.hadoop.fs.Path): Seq[String] = {
     val in = fs.open(p)
@@ -152,39 +161,125 @@ object Warehouse {
     body.split("\n").toSeq.filter(_.nonEmpty)
   }
 
-  /** Commit the lake's CURRENT data files as its live manifest. */
-  def writeFileManifest(path: String): Unit = {
-    val (fs, root) = fsFor(path)
-    writeTextFile(fs, new org.apache.hadoop.fs.Path(root, fileManifestName),
-      listDataFiles(path).mkString("\n"))
+  /** The one way a registry file lands — a log entry, a stats entry, a
+    * Layouts manifest. `body` is written in full to a hidden temp file
+    * beside `target` (`.`-prefixed and not ending in `.manifest`, so
+    * neither a log listing nor a tail of the log's entries sees it), then
+    * published in one step:
+    *  - `exclusive` (a numbered log entry): fail-if-exists. If `target`
+    *    already exists another writer published that version first, and
+    *    the call throws ConcurrentModificationException — a committed
+    *    version is never overwritten and the log never renumbers.
+    *  - otherwise (a stats entry, a Layouts manifest): atomic replace —
+    *    a reader sees the old file or the new one, never a partial one.
+    *
+    * A `file` path publishes through java.nio: a hard link for the
+    * exclusive step, an atomic rename for the replace. Any other scheme
+    * goes through Hadoop `FileContext.rename` with `Rename.NONE` or
+    * `Rename.OVERWRITE`, which is atomic on HDFS and on ABFS with a
+    * hierarchical namespace; on S3A a rename is a copy, so neither step
+    * is atomic there and a lake on S3 needs the store's conditional put
+    * in this place. (Hadoop's own local FS checks the target and then
+    * renames, which is why `file` paths take the java.nio branch.)
+    * Nothing is written in place, so no reader sees a truncated file,
+    * and the java.nio branch leaves no `.crc` sibling to go stale. */
+  private[etl] def publish(target: org.apache.hadoop.fs.Path, body: String,
+                           exclusive: Boolean): Unit = {
+    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val tmpName = s".${target.getName}.${java.util.UUID.randomUUID()}.tmp"
+    def conflict() = new java.util.ConcurrentModificationException(
+      s"$target was published by another writer first — re-derive " +
+        "against the current head and retry")
+    if (Option(target.toUri.getScheme).forall(_ == "file")) {
+      import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
+      val t = Paths.get(target.toUri.getPath)
+      val tmp = t.resolveSibling(tmpName)
+      Files.createDirectories(t.getParent)
+      try {
+        Files.write(tmp, bytes)
+        if (exclusive) Files.createLink(t, tmp)
+        else Files.move(tmp, t,
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      } catch {
+        case e: Exception =>
+          Files.deleteIfExists(tmp)
+          throw (if (e.isInstanceOf[FileAlreadyExistsException]) conflict() else e)
+      }
+      if (exclusive) Files.delete(tmp)
+    } else {
+      import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options}
+      val (fs, _) = fsFor(target.toString)
+      val tmp = new org.apache.hadoop.fs.Path(target.getParent, tmpName)
+      try {
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
+        FileContext.getFileContext(target.toUri, fs.getConf).rename(tmp, target,
+          if (exclusive) Options.Rename.NONE else Options.Rename.OVERWRITE)
+      } catch {
+        case e: Exception =>
+          fs.delete(tmp, false)
+          throw (if (e.isInstanceOf[FileAlreadyExistsException]) conflict() else e)
+      }
+    }
   }
 
-  def manifestedFiles(path: String): Seq[String] = {
+  private def logEntryPath(root: org.apache.hadoop.fs.Path, v: Int) =
+    new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(root, logDirName), f"$v%08d.manifest")
+
+  /** Retained snapshot versions, ascending. Expired versions are absent. */
+  def snapshotVersions(path: String): Seq[Int] = {
     val (fs, root) = fsFor(path)
-    val p = new org.apache.hadoop.fs.Path(root, fileManifestName)
-    if (!fs.exists(p)) Seq.empty
-    else readTextLines(fs, p)
+    val lp = new org.apache.hadoop.fs.Path(root, logDirName)
+    if (!fs.exists(lp)) Seq.empty
+    else fs.listStatus(lp).toSeq.map(_.getPath.getName)
+      .filter(_.endsWith(".manifest"))
+      .map(_.stripSuffix(".manifest").toInt).sorted
   }
 
-  /** Manifest-resolved read: exactly the live files, with partition
-    * columns still derived from the directory keys (`basePath`). A
-    * committed-but-EMPTY manifest (a takedown emptied the lake) is a
-    * valid state — it reads as an empty frame, not a schema-inference
-    * crash over zero paths. Callers whose downstream references columns
-    * pass the lake `schema` so the empty frame RESOLVES them (an
-    * unschema'd empty frame would trade the inference crash for an
-    * UNRESOLVED_COLUMN one); with no schema and no files the frame is
-    * columnless, fit only for counting. */
+  /** A retained version's whole entry: data files, then `_dv/` sidecars.
+    * Reading an EXPIRED (or never-committed) version fails loudly —
+    * falling back to head would silently answer a historical query with
+    * current data. */
+  private def entryLines(path: String, version: Int): Seq[String] = {
+    val (fs, root) = fsFor(path)
+    val p = logEntryPath(root, version)
+    require(fs.exists(p),
+      s"snapshot version $version is not in the log at $path — expired or never committed")
+    readTextLines(fs, p)
+  }
+
+  /** The live-file list of a retained snapshot. */
+  def snapshotFiles(path: String, version: Int): Seq[String] =
+    entryLines(path, version).filterNot(_.startsWith(dvPrefix))
+
+  /** The head version and its live files, from one listing of the log;
+    * (0, empty) on a lake with no log. */
+  private def headOf(path: String): (Int, Seq[String]) =
+    snapshotVersions(path).lastOption
+      .fold((0, Seq.empty[String]))(v => (v, snapshotFiles(path, v)))
+
+  /** The head's live files: the newest log entry's; empty with no log. */
+  def manifestedFiles(path: String): Seq[String] = headOf(path)._2
+
+  /** Head read: exactly the live files, with partition columns still
+    * derived from the directory keys (`basePath`). A committed-but-EMPTY
+    * entry (a takedown emptied the lake) is a valid state — it reads as
+    * an empty frame, not a schema-inference crash over zero paths.
+    * Callers whose downstream references columns pass the lake `schema`
+    * so the empty frame RESOLVES them (an unschema'd empty frame would
+    * trade the inference crash for an UNRESOLVED_COLUMN one); with no
+    * schema and no files the frame is columnless, fit only for counting. */
   def readManifested(s: SparkSession, path: String,
                      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
     readFilesOf(s, path, manifestedFiles(path), schema)
 
   /** Resolve an explicit relative-file list under `path` into a frame,
     * partition columns still derived from the directory keys
-    * (`basePath`). The shared resolution for the head manifest, AS-OF
-    * snapshot reads, and the changed-file sides of a snapshot diff. An
-    * empty list with a schema resolves columns as an empty frame (the
-    * emptied-lake contract readManifested documents). */
+    * (`basePath`). The shared resolution for the head, AS-OF snapshot
+    * reads, and the changed-file sides of a snapshot diff. An empty list
+    * with a schema resolves columns as an empty frame (the emptied-lake
+    * contract readManifested documents). */
   private[graft] def readFilesOf(s: SparkSession, path: String, rels: Seq[String],
                                  schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     val files = rels.map(f => s"$path/$f")
@@ -206,96 +301,42 @@ object Warehouse {
     }
   }
 
-  // ---------------------------------------------- versioned snapshot log
-
-  /** The file manifest taken to VERSIONED form — the lakehouse-log
-    * convention (Delta/Iceberg): every commit writes an immutable,
-    * monotonically numbered manifest under `_graft_log/`, and the head
-    * pointer (`_graft_files`) always equals the newest entry. Data files
-    * are immutable once written; a rewrite ADDS new files and drops the
-    * replaced ones from the new manifest only (copy-on-write), so every
-    * retained version stays byte-readable — time travel, change-data-feed
-    * at changed-file granularity, and safe concurrent readers all fall
-    * out of the same discipline. Physical reclamation happens only at
-    * VACUUM, whose live set is the UNION of every retained snapshot, and
-    * only after `expireSnapshots` has dropped a version from the log.
-    * At 100 TB this is the difference between "a takedown rewrite
-    * destroys yesterday's audit view mid-query" and the log every real
-    * lake format provides. */
-  private val logDirName = "_graft_log"
-
-  private def logEntryPath(root: org.apache.hadoop.fs.Path, v: Int) =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, logDirName), f"$v%08d.manifest")
-
-  /** Commit an explicit live-file list as the next snapshot version.
-    * Log entry first, head pointer second: a reader that sees the new
-    * head can always resolve its log entry, while the reverse order
-    * would let a head point at a not-yet-visible manifest. Returns the
-    * committed version number (1-based, monotonic).
+  /** Commit an explicit live-file list as the next snapshot version. The
+    * commit is ONE step — its entry published fail-if-exists — so a
+    * reader sees the previous head or the new one, never a partial
+    * entry, and a writer that dies before the publish leaves the log as
+    * it was. The entry also lists the version's active delete sidecars:
+    * the previous version's, carried forward (so a version's deletes are
+    * always stated on the version itself — no read-time inheritance
+    * walk, and expiring any prefix of the log can never detach a
+    * retained version from its deletes), or the caller's override
+    * (deleteLogged appends its new sidecar, compactDeletes passes the
+    * empty list). Returns the committed version number (1-based,
+    * monotonic).
     *
-    * `expectedHead` is the optimistic-concurrency check (the lakehouse
-    * commit protocol): a writer states the version its file list was
-    * DERIVED FROM, and a commit whose expectation no longer matches the
-    * log head throws instead of silently overwriting the interleaved
-    * writer's commit — the lost-update anomaly. The loser re-derives
-    * against the new head and retries (the spec walks the rebase). The
-    * check is read-then-write, so it detects every stale writer the
-    * store's listing can see; TRUE mutual exclusion between two commits
-    * racing inside the same instant needs the store's atomic
-    * conditional-put (S3 if-none-match, HDFS rename) under the log
-    * entry write — the same primitive every lakehouse log delegates to,
-    * pluggable here via the FileSystem the path resolves. */
+    * Two commits can never both take one version: the later publish
+    * throws ConcurrentModificationException, with or without an
+    * expectation. `expectedHead` is the optimistic-concurrency check (the
+    * lakehouse commit protocol): a writer states the version its file
+    * list was DERIVED FROM, and a commit whose expectation no longer
+    * matches the head throws too — that catches a writer whose list came
+    * from an older head, which the exclusive publish alone cannot see.
+    * Either loser re-derives against the new head and retries (the spec
+    * walks the rebase). */
   def commitSnapshot(path: String, files: Seq[String],
                      expectedHead: Option[Int] = None,
                      sidecarsOverride: Option[Seq[String]] = None): Int = {
-    val (fs, root) = fsFor(path)
+    val (_, root) = fsFor(path)
     val cur = snapshotVersions(path).lastOption.getOrElse(0)
     expectedHead.foreach { e =>
       if (cur != e) throw new java.util.ConcurrentModificationException(
         s"commit conflict at $path: expected head $e but found $cur — " +
           "re-derive the file list against the current head and retry")
     }
-    val next = cur + 1
-    val body = files.sorted.mkString("\n")
-    writeTextFile(fs, logEntryPath(root, next), body)
-    // delete sidecars CARRY FORWARD: every commit copies the previous
-    // version's active sidecar list to its own `.deletes` entry (or the
-    // caller's override — deleteLogged appends its new sidecar,
-    // compactDeletes passes the empty list), so a version's deletes are
-    // always stated on the version itself — no read-time inheritance
-    // walk, and expiring any prefix of the log can never detach a
-    // retained version from its deletes. The entry lands BEFORE the
-    // head pointer, same ordering rule as the log entry itself: a
-    // reader that sees the new head resolves the new version COMPLETE,
-    // deletes included — never a window where a just-committed takedown
-    // is invisible at head.
     val sidecars = sidecarsOverride.getOrElse(deleteSidecars(path, cur))
-    if (sidecars.nonEmpty)
-      writeTextFile(fs, deletesEntryPath(root, next), sidecars.mkString("\n"))
-    writeTextFile(fs, new org.apache.hadoop.fs.Path(root, fileManifestName), body)
-    next
-  }
-
-  /** Crash recovery: reconcile the head pointer to the newest log
-    * entry. The commit protocol writes the log entry BEFORE the head
-    * pointer, so a writer that dies between the two leaves a fully
-    * written manifest the head does not yet reference — the LOG is
-    * authoritative (the entry's files are complete, and vacuum's live
-    * set already retains them through the log), the head file is only a
-    * cache of the newest entry. Until repaired, readers through
-    * readManifested serve the previous version (consistent, just
-    * stale); the next successful commit or this verb promotes the
-    * entry. Returns the head version after repair; 0 on an empty log. */
-  def repairHead(path: String): Int = {
-    val (fs, root) = fsFor(path)
-    snapshotVersions(path).lastOption match {
-      case None => 0
-      case Some(v) =>
-        writeTextFile(fs, new org.apache.hadoop.fs.Path(root, fileManifestName),
-          snapshotFiles(path, v).mkString("\n"))
-        v
-    }
+    publish(logEntryPath(root, cur + 1),
+      (files.sorted ++ sidecars).mkString("\n"), exclusive = true)
+    cur + 1
   }
 
   /** Bootstrap commit: snapshot the directory's CURRENT data files.
@@ -304,27 +345,6 @@ object Warehouse {
     * later commits pass their file lists explicitly. */
   def commitSnapshotFromListing(path: String): Int =
     commitSnapshot(path, listDataFiles(path))
-
-  /** Retained snapshot versions, ascending. Expired versions are absent. */
-  def snapshotVersions(path: String): Seq[Int] = {
-    val (fs, root) = fsFor(path)
-    val lp = new org.apache.hadoop.fs.Path(root, logDirName)
-    if (!fs.exists(lp)) Seq.empty
-    else fs.listStatus(lp).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".manifest"))
-      .map(_.stripSuffix(".manifest").toInt).sorted
-  }
-
-  /** The live-file list of a retained snapshot. Reading an EXPIRED (or
-    * never-committed) version fails loudly — falling back to head would
-    * silently answer a historical query with current data. */
-  def snapshotFiles(path: String, version: Int): Seq[String] = {
-    val (fs, root) = fsFor(path)
-    val p = logEntryPath(root, version)
-    require(fs.exists(p),
-      s"snapshot version $version is not in the log at $path — expired or never committed")
-    readTextLines(fs, p)
-  }
 
   /** Time-travel read: the lake AS OF `version`, resolved through that
     * version's manifest. Cost is the snapshot's own file set — the log
@@ -348,24 +368,23 @@ object Warehouse {
     * its own commit surfaces as a loud conflict, never a lost update.
     * Returns the new version. */
   def appendLogged(df: DataFrame, partCol: String, path: String): Int = {
-    val base = snapshotVersions(path).lastOption.getOrElse(0)
-    val head = manifestedFiles(path)
+    val (base, head) = headOf(path)
     val added = writeUncommitted(df, partCol, path)
     commitSnapshot(path, head ++ added, expectedHead = Some(base))
   }
 
   /** WRITE-AUDIT-PUBLISH, step one: land a batch's files in the lake
-    * WITHOUT committing them — they exist on storage but no manifest
+    * WITHOUT committing them — they exist on storage but no log entry
     * references them, so every reader (head, time travel, CDF) is blind
     * to them. Returns the written relative paths: the caller audits the
     * pending batch by reading exactly those files (readFilesOf), then
-    * either PUBLISHES (commitSnapshot(head ∪ pending) — one atomic
-    * manifest write makes the whole batch visible at once) or simply
+    * either PUBLISHES (commitSnapshot(head ∪ pending) — one published
+    * entry makes the whole batch visible at once) or simply
     * walks away — an abandoned batch is indistinguishable from an
     * aborted writer's leftovers and the retention-aged vacuum reclaims
     * it. The quarantine the reference approximates with staging tables
-    * falls out of the log for free: data files are invisible until a
-    * manifest says otherwise. */
+    * falls out of the log for free: data files are invisible until an
+    * entry says otherwise. */
   def writeUncommitted(df: DataFrame, partCol: String, path: String): Seq[String] = {
     val before = listDataFiles(path).toSet
     df.write.mode("append").partitionBy(partCol).parquet(path)
@@ -401,14 +420,11 @@ object Warehouse {
   def rewritePartitionsLogged(df: DataFrame, partCol: String, path: String,
                               emptiedDirs: Seq[String] = Nil,
                               sidecarsOverride: Option[Seq[String]] = None): Int = {
-    val base = snapshotVersions(path).lastOption.getOrElse(0)
-    val head = manifestedFiles(path)
+    val (base, head) = headOf(path)
     val staging = graft.Staging.fresh("logged-rewrite")
     df.write.mode("overwrite").partitionBy(partCol).parquet(staging)
-    val staged = df.sparkSession.read.schema(df.schema).parquet(staging)
-    val before = listDataFiles(path).toSet
-    staged.write.mode("append").partitionBy(partCol).parquet(path)
-    val added = listDataFiles(path).filterNot(before)
+    val added = writeUncommitted(
+      df.sparkSession.read.schema(df.schema).parquet(staging), partCol, path)
     val touched = added.flatMap(dirOf).toSet ++ emptiedDirs
     val kept = head.filterNot(f => dirOf(f).exists(touched.contains))
     // the commit carries the head version this rewrite derived from —
@@ -527,8 +543,8 @@ object Warehouse {
       }
     val lines = (carried ++ fresh).toSeq
       .map { case ((f, k), (lo, hi)) => s"$f|$k|$lo|$hi" }.sorted
-    val (fs, root) = fsFor(path)
-    writeTextFile(fs, statsEntryPath(root, version), lines.mkString("\n"))
+    publish(statsEntryPath(fsFor(path)._2, version), lines.mkString("\n"),
+      exclusive = false)
   }
 
   /** The recorded stats of a snapshot: (file, col) → (min, max). */
@@ -572,25 +588,19 @@ object Warehouse {
     * partitions, a DELETE SIDECAR pays O(k): the delete keys land as a
     * parquet file under the hidden `_dv/` tree (invisible to
     * listDataFiles, so never vacuum-examined or listed as data), and
-    * the commit's `.deletes` log entry lists the ACTIVE sidecar files
-    * for that version — full-list, not delta, so deletes time-travel
-    * exactly like data: a version's read is its manifest files
+    * the version's own log entry lists its ACTIVE sidecars as `_dv/`
+    * lines after its data files — full-list, not delta, so deletes
+    * time-travel exactly like data: a version's read is its data files
     * anti-joined with its sidecar union, and an earlier version never
     * sees a later delete. Readers pay the anti-join until a compaction
     * (compactDeletes) materializes survivors through the copy-on-write
     * path and commits an empty sidecar list — the standard
     * read-amplification/write-amplification trade, chosen per table. */
-  private def deletesEntryPath(root: org.apache.hadoop.fs.Path, v: Int) =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, logDirName), f"$v%08d.deletes")
-
-  /** The active delete-sidecar files (relative paths) of a snapshot.
-    * A version with no `.deletes` entry has none. */
-  def deleteSidecars(path: String, version: Int): Seq[String] = {
-    val (fs, root) = fsFor(path)
-    val p = deletesEntryPath(root, version)
-    if (!fs.exists(p)) Seq.empty else readTextLines(fs, p)
-  }
+  /** The active delete-sidecar files (relative paths) of a retained
+    * snapshot: its entry's `_dv/` lines. Version 0 (no log) has none. */
+  def deleteSidecars(path: String, version: Int): Seq[String] =
+    if (version == 0) Seq.empty
+    else entryLines(path, version).filter(_.startsWith(dvPrefix))
 
   /** Commit a merge-on-read delete: write `keys` (a bounded frame with
     * the single key column `keyCol`) as a new sidecar parquet, and
@@ -598,14 +608,10 @@ object Warehouse {
     * version's sidecars plus the new one. O(keys) written, zero data
     * files touched. Returns the new version. */
   def deleteLogged(keys: DataFrame, keyCol: String, path: String): Int = {
-    val base = snapshotVersions(path).lastOption.getOrElse(0)
+    val (base, head) = headOf(path)
     require(base >= 1, s"deleteLogged needs a committed snapshot at $path")
-    val head = manifestedFiles(path)
-    val rel = s"_dv/dv-$base-${java.util.UUID.randomUUID().toString.take(8)}"
+    val rel = s"${dvPrefix}dv-$base-${java.util.UUID.randomUUID().toString.take(8)}"
     keys.select(keyCol).write.mode("overwrite").parquet(s"$path/$rel")
-    // the appended sidecar list rides the commit itself, so the
-    // `.deletes` entry is on disk before the head pointer moves — a
-    // reader of the new head can never transiently miss the takedown
     commitSnapshot(path, head, expectedHead = Some(base),
       sidecarsOverride = Some(deleteSidecars(path, base) :+ rel))
   }
@@ -632,9 +638,9 @@ object Warehouse {
 
   /** Materialize pending deletes: rewrite ONLY the partitions that
     * still hold deleted keys through the copy-on-write path, then mark
-    * the new version's sidecar list EMPTY (an explicit empty `.deletes`
-    * entry — the version carries no deletes, and earlier versions keep
-    * theirs for time travel). The touched-partition set comes from one
+    * the new version's sidecar list EMPTY (its entry has no `_dv/` lines
+    * — the version carries no deletes, and earlier versions keep theirs
+    * for time travel). The touched-partition set comes from one
     * semi-join of the lake against the broadcast sidecar keys — a
     * bounded driver scalar. Sidecar FILES stay on disk for the retained
     * versions that reference them; they live outside the data tree, so
@@ -642,10 +648,10 @@ object Warehouse {
   def compactDeletes(s: SparkSession, path: String, partCol: String,
                      keyCol: String,
                      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
-    val base = snapshotVersions(path).lastOption.getOrElse(0)
+    val (base, head) = headOf(path)
     val dvs = deleteSidecars(path, base)
     if (dvs.isEmpty)
-      return commitSnapshot(path, manifestedFiles(path),
+      return commitSnapshot(path, head,
         expectedHead = Some(base), sidecarsOverride = Some(Nil))
     val keys = dvs.map(d => s.read.parquet(s"$path/$d"))
       .reduce(_.unionByName(_)).distinct()
@@ -661,7 +667,7 @@ object Warehouse {
     // a partition whose rows are ALL deleted writes no survivor file,
     // so the rewrite cannot infer it was touched — name it explicitly
     // (the emptiedDirs contract) or its old files would stay in the
-    // manifest while the sidecar list empties, resurrecting the rows.
+    // entry while the sidecar list empties, resurrecting the rows.
     // Both distinct lists are bounded driver scalars.
     val survParts = survivors.select(partCol).distinct()
       .collect().map(_.get(0).toString).toSet
@@ -681,11 +687,10 @@ object Warehouse {
     val drop = snapshotVersions(path).dropRight(keepLast)
     drop.foreach { v =>
       fs.delete(logEntryPath(root, v), false)
-      // the version's sidecar LIST and stats go with it (sidecar FILES
-      // may still be referenced by retained versions' own carried
-      // entries — they are small and live outside the data tree; a
-      // sweep of unreferenced sidecars would mirror vacuum over _dv/)
-      fs.delete(deletesEntryPath(root, v), false)
+      // the version's stats go with it (sidecar FILES may still be
+      // referenced by retained versions' own carried lines — they are
+      // small and live outside the data tree; a sweep of unreferenced
+      // sidecars would mirror vacuum over _dv/)
       fs.delete(statsEntryPath(root, v), false)
     }
     drop
@@ -693,34 +698,30 @@ object Warehouse {
 
   /** VACUUM — the third lake-maintenance verb next to takedown (q250)
     * and compaction (q256): list the lake's data files, diff against the
-    * live manifest, and DELETE unmanifested files whose age exceeds the
+    * retained log entries, and DELETE unlisted files whose age exceeds the
     * retention window. The window is the standard in-flight-writer grace
     * period (Delta's VACUUM semantics): a young orphan may be a writer
     * mid-commit, so it is SPARED this pass and swept by a later one.
-    * Manifested files are never deleted regardless of age — the manifest
-    * is the definition of live. Idempotent and retry-safe: deletion of
+    * Files a retained entry lists are never deleted regardless of age —
+    * the log is the definition of live. Idempotent and retry-safe: deletion of
     * an already-gone file is a no-op, and re-running sweeps nothing new.
     * Returns one row per examined orphan: (partition dir, file name,
     * swept?). Cost is O(listing + orphans), never O(data). */
   def vacuum(path: String, retentionMs: Long, nowMs: Long): Seq[(String, String, Boolean)] = {
-    // NO manifest is not the same as an empty one: without a live-file
+    // NO log is not the same as an empty entry: without a live-file
     // RECORD, every data file would read as an orphan and an aged lake
-    // would be swept whole — refuse loudly. A committed-but-empty
-    // manifest (a takedown emptied the lake) is a valid record and its
-    // orphans remain reclaimable, so the guard tests the FILE, not the
-    // list.
+    // would be swept whole — refuse loudly. A committed-but-empty entry
+    // (a takedown emptied the lake) is a valid record and its orphans
+    // remain reclaimable, so the guard tests the log, not the list.
     val (fs, root) = fsFor(path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(root, fileManifestName)),
-      s"vacuum refused: no $fileManifestName manifest at $path — " +
-        "commit one with writeFileManifest before sweeping")
-    // live = the head manifest PLUS every retained snapshot in the log:
-    // a file a historical version still references is not reclaimable —
-    // sweeping it would break time travel mid-retention. Only after
-    // expireSnapshots drops the version does its exclusive file set
-    // become orphaned. A lake with no log reduces to head-only, the
-    // pre-log semantics q309/VacuumSpec pin.
-    val live = (manifestedFiles(path) ++
-      snapshotVersions(path).flatMap(v => snapshotFiles(path, v))).toSet
+    val versions = snapshotVersions(path)
+    require(versions.nonEmpty, s"vacuum refused: no snapshot log at $path — " +
+      "commit one with commitSnapshotFromListing before sweeping")
+    // live = the UNION of every retained entry: a file a historical
+    // version still references is not reclaimable — sweeping it would
+    // break time travel mid-retention. Only after expireSnapshots drops
+    // the version does its exclusive file set become orphaned.
+    val live = versions.flatMap(v => snapshotFiles(path, v)).toSet
     listDataFiles(path).filterNot(live).flatMap { rel =>
       val p = new org.apache.hadoop.fs.Path(root, rel)
       // the stat races a concurrent sweep or a self-cleaning aborted
@@ -747,16 +748,12 @@ object Warehouse {
 
   /** Byte-cheap lake clone, for running a maintenance verb fresh on every
     * invocation against a shared constructed fixture: hardlink every
-    * immutable file (data parquet, `_dv/` sidecars — the log's
-    * copy-on-write discipline means no verb ever modifies one in place;
-    * a vacuum in the clone only unlinks the clone's own link), and
-    * byte-COPY the mutable log state — `_graft_files` is truncated in
-    * place by every commit (RawLocalFileSystem.create), so sharing its
-    * inode would corrupt the source lake. `.crc` checksum siblings are
-    * skipped (ChecksumFileSystem treats a missing sibling as
-    * unverified, and a shared one would go stale when the clone's head
-    * is rewritten). O(file count) on a store with links; falls back to
-    * a byte copy elsewhere. The clone is a Staging dir — swept at JVM
+    * file, log included. No verb modifies a file in place — data files
+    * and `_dv/` sidecars are copy-on-write, and every log entry lands
+    * through [[publish]] as a new file that replaces the clone's own
+    * link — so a commit, a stats refresh or a vacuum in the clone never
+    * reaches the source's inodes. O(file count) on a store with links;
+    * falls back to a byte copy elsewhere. The clone is a Staging dir — swept at JVM
     * exit like every other staged intermediate. */
   def cloneLake(srcPath: String, tag: String): String = {
     val dst = graft.Staging.fresh(tag)
@@ -769,16 +766,12 @@ object Warehouse {
         val t = dstRoot.resolve(rel)
         if (java.nio.file.Files.isDirectory(p))
           java.nio.file.Files.createDirectories(t)
-        else if (!rel.endsWith(".crc")) {
-          if (rel == fileManifestName || rel.startsWith(logDirName))
-            java.nio.file.Files.copy(p, t)
-          else
-            try java.nio.file.Files.createLink(t, p)
-            catch {
-              case _: UnsupportedOperationException | _: java.io.IOException =>
-                java.nio.file.Files.copy(p, t)
-            }
-        }
+        else
+          try java.nio.file.Files.createLink(t, p)
+          catch {
+            case _: UnsupportedOperationException | _: java.io.IOException =>
+              java.nio.file.Files.copy(p, t)
+          }
       }
     } finally stream.close()
     dst

@@ -642,28 +642,28 @@ object EtlQueries {
 
   /** q309 — VACUUM (orphan-file sweep, the third lake-maintenance verb
     * after q250's takedown and q256's compaction): commit a
-    * source-partitioned document lake with a FILE manifest
-    * (Warehouse.writeFileManifest — the Layouts discipline at file
-    * granularity), deterministically plant the aborted-ingest leftovers
-    * a real object store accumulates (per partition: one orphan AGED
-    * past the 24 h retention window and one YOUNG orphan inside it —
-    * committed-looking `part-orphan-*.parquet` copies of live data the
-    * manifest never saw), sweep with Warehouse.vacuum, and audit the
-    * lake through the MANIFEST-resolved read. Retention is the standard
-    * in-flight-writer grace period (Delta's VACUUM semantics): the young
-    * orphan is spared this pass, the old one is reclaimed, and
-    * manifested files are never touched regardless of age.
+    * source-partitioned document lake as snapshot version 1
+    * (Warehouse.commitSnapshotFromListing — one published log entry
+    * listing the live files), deterministically plant the aborted-ingest
+    * leftovers a real object store accumulates (per partition: one
+    * orphan AGED past the 24 h retention window and one YOUNG orphan
+    * inside it — committed-looking `part-orphan-*.parquet` copies of
+    * live data the log never saw), sweep with Warehouse.vacuum, and
+    * audit the lake through the head-resolved read. Retention is the
+    * standard in-flight-writer grace period (Delta's VACUUM semantics):
+    * the young orphan is spared this pass, the old one is reclaimed,
+    * and logged files are never touched regardless of age.
     *
     * The oracle proves CONSERVATION plus the sweep arithmetic: per-source
     * counts from the re-read lake must equal the source table (a vacuum
-    * that deleted a live file, or a manifest read that leaked an orphan
+    * that deleted a live file, or a head read that leaked an orphan
     * copy, double-counts or loses rows and fails the hash), and the
     * planted-orphan construction is deterministic so n_swept = n_spared
     * = 1 are oracle literals — sweeping the wrong file count mismatches.
     * VacuumSpec asserts the filesystem half: the old orphan is gone, the
     * young one remains, live bytes are untouched, a second pass sweeps
     * zero, and the naive directory-listing read WOULD have double-counted
-    * (the hazard the manifest retires).
+    * (the hazard the log retires).
     *
     * Scale shape: the sweep is O(listing + orphans), never O(data); the
     * audit scan is the audit's cost, not the vacuum's. */
@@ -671,7 +671,7 @@ object EtlQueries {
     val path = graft.Staging.fresh("vacuum")
     val docs = Tables.documents(s, dir)
     Warehouse.writePartitioned(docs, "source", path, firstRun = true)
-    Warehouse.writeFileManifest(path)
+    Warehouse.commitSnapshotFromListing(path)
     val nowMs = System.currentTimeMillis()
     plantOrphans(path, nowMs)
     val report = Warehouse.vacuum(path, retentionMs = 24L * 3600 * 1000, nowMs)
@@ -1042,12 +1042,12 @@ object EtlQueries {
   /** q331 — DELETION VECTORS (merge-on-read takedown): the OTHER delete
     * strategy next to the copy-on-write rewrite. The takedown keys land
     * as an O(k) sidecar (Warehouse.deleteLogged — zero data files
-    * touched), the commit's `.deletes` entry lists the version's active
-    * sidecars, and the merge-on-read read anti-joins the broadcast
-    * sidecar union. Deletes time-travel exactly like data: v1 carries
-    * no sidecars and reads WHOLE after the delete commit, which the
-    * side-by-side audit proves. When to choose which is a real 100 TB
-    * decision: a thousand-row takedown against TB partitions is O(k)
+    * touched), the commit's log entry lists the version's active
+    * sidecars as `_dv/` lines, and the merge-on-read read anti-joins
+    * the broadcast sidecar union. Deletes time-travel exactly like
+    * data: v1 carries no sidecars and reads WHOLE after the delete
+    * commit, which the side-by-side audit proves. When to choose which
+    * is a real 100 TB decision: a thousand-row takedown against TB partitions is O(k)
     * here vs O(touched partitions) for q250's rewrite; the price is the
     * read-side anti-join until q332's compaction folds it away. */
   def q331DeletionVectors(s: SparkSession, dir: String): DataFrame = {
@@ -1120,20 +1120,21 @@ object EtlQueries {
 
   /** q333 — WRITE-AUDIT-PUBLISH (the WAP ingest pattern the log gives
     * for free): two crawl batches land UNCOMMITTED
-    * (Warehouse.writeUncommitted — on storage, referenced by no
-    * manifest, invisible to every reader), each is audited by reading
+    * (Warehouse.writeUncommitted — on storage, referenced by no log
+    * entry, invisible to every reader), each is audited by reading
     * exactly its own pending files, and only the batch that clears the
     * quality gate (avg chars ≥ 30 — batch B is truncated to 20-char
-    * stubs by construction and fails) PUBLISHES via one atomic manifest
-    * commit; the failed batch is simply walked away from and the
-    * retention-aged vacuum reclaims its files as ordinary orphans. The
-    * audit proves all four verdicts at once: head = base ∪ batch A
-    * (published rows visible, exactly once), batch B's rows nowhere in
-    * the head (the quarantine), every examined orphan swept (the
-    * abandoned files actually reclaimed), and the pre-publish head
-    * never saw EITHER batch (the flags pin the gate outcomes).
+    * stubs by construction and fails) PUBLISHES via one commit — one
+    * log entry published fail-if-exists; the failed batch is simply
+    * walked away from and the retention-aged vacuum reclaims its files
+    * as ordinary orphans. The audit proves all four verdicts at once:
+    * head = base ∪ batch A (published rows visible, exactly once),
+    * batch B's rows nowhere in the head (the quarantine), every
+    * examined orphan swept (the abandoned files actually reclaimed),
+    * and the pre-publish head never saw EITHER batch (the flags pin the
+    * gate outcomes).
     *
-    * Scale: publish is one manifest write regardless of batch size —
+    * Scale: publish is one log entry regardless of batch size —
     * ingest visibility is atomic and all-or-nothing, which is the
     * entire reason the pattern exists; the audit reads O(batch). */
   def q333WriteAuditPublish(s: SparkSession, dir: String): DataFrame = {

@@ -887,10 +887,11 @@ object StreamingQueries {
     val ss = drain(s) { ss =>
       ss.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
-        // the log dir also carries `.deletes`/`.stats` sidecar entries on
-        // lakes with deletion vectors or manifest stats — the tail follows
-        // MANIFESTS only (the snapshotVersions filter, applied at the
-        // source so sidecar entries never even enter the stream)
+        // the log dir also carries `.stats` entries on lakes with
+        // manifest stats and, for an instant per commit, a hidden temp
+        // file — the tail follows `*.manifest` entries only (the
+        // snapshotVersions filter, applied at the source so neither ever
+        // enters the stream)
         .option("pathGlobFilter", "*.manifest")
         .load(s"$path/_graft_log")
         .select(col("value"), col("_metadata.file_path").as("mf"))

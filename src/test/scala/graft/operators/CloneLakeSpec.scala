@@ -64,4 +64,30 @@ class CloneLakeSpec extends AnyFunSuite {
     // and the clone's post-vacuum head still serves the survivors
     assert(Warehouse.readManifested(spark, dst).count() == 100L)
   }
+
+  test("stats maintenance and a commit in the clone leave the source's log bytes unchanged") {
+    import spark.implicits._
+    val src = graft.Staging.fresh("clonespec-log")
+    val df = (0L until 200L).map(i => (i, i * 7 % 13, i % 4))
+      .toDF("doc_id", "score", "part")
+    Warehouse.writePartitioned(df.repartition(col("part")), "part", src,
+      firstRun = true)
+    Warehouse.commitSnapshotFromListing(src)
+    Warehouse.writeFileStats(spark, src, 1, Seq("doc_id"))
+    def logBytes(lake: String): Map[String, Seq[Byte]] =
+      new java.io.File(s"$lake/_graft_log").listFiles().map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = logBytes(src)
+    // the clone hardlinks the source's log entries: a write in place
+    // would reach the source through the shared inode
+    val dst = Warehouse.cloneLake(src, "clonespec-logclone")
+    Warehouse.maintainFileStats(spark, dst, 1, Seq("doc_id", "score"))
+    assert(Warehouse.fileStats(dst, 1) != Warehouse.fileStats(src, 1),
+      "the clone's v1 stats entry was rewritten")
+    Warehouse.commitSnapshot(dst, Warehouse.manifestedFiles(dst).drop(1),
+      expectedHead = Some(1))
+    assert(Warehouse.snapshotVersions(dst) == Seq(1, 2))
+    assert(logBytes(src) == before, "the source's _graft_log/ changed")
+    assert(Warehouse.snapshotVersions(src) == Seq(1))
+  }
 }

@@ -65,7 +65,7 @@ class TimeTravelSpec extends AnyFunSuite {
     paV1.foreach(f => assert(
       java.nio.file.Files.exists(java.nio.file.Paths.get(path, f)),
       s"replaced file $f must remain on disk while v1 is retained"))
-    // head pointer equals the newest log entry
+    // the head is the newest log entry
     assert(Warehouse.manifestedFiles(path) == Warehouse.snapshotFiles(path, v2))
     assert(Warehouse.snapshotVersions(path) == Seq(1, 2))
   }
@@ -387,32 +387,34 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(Warehouse.fileStats(path, v3).keySet.map(_._1) == added.toSet)
   }
 
-  test("a crash between log entry and head pointer recovers: log wins, head repairs") {
+  test("a commit that crashed before publishing is invisible") {
     import spark.implicits._
     val path = buildLake()
     val sc = schemaOf(path)
     val v1 = Warehouse.commitSnapshotFromListing(path)
-    // simulate the crash window: land a batch and write ONLY the log
-    // entry for v2 (the commit protocol's first write), no head pointer
+    // simulate a writer that died inside its commit: the batch landed and
+    // the v2 entry's body sits in the publish's hidden temp file, but the
+    // entry itself was never published
     val added = Warehouse.writeUncommitted(
       Seq((21L, "pa", 9L)).toDF("id", "part", "v"), "part", path)
-    val entry = new java.io.File(s"$path/_graft_log/00000002.manifest")
-    java.nio.file.Files.writeString(entry.toPath,
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "_graft_log",
+        s".00000002.manifest.${java.util.UUID.randomUUID()}.tmp"),
       (Warehouse.manifestedFiles(path) ++ added).sorted.mkString("\n"))
-    // before repair: readers serve the PREVIOUS version (stale, never
-    // inconsistent), the log already sees v2, vacuum retains its files
+    // readers serve v1, the log holds v1 only, and vacuum spares the
+    // batch's young files (the writer may still be mid-commit)
     assert(Warehouse.readManifested(spark, path, sc).count() == 8)
-    assert(Warehouse.snapshotVersions(path) == Seq(1, 2))
+    assert(Warehouse.snapshotVersions(path) == Seq(1))
     val r = Warehouse.vacuum(path, retentionMs = dayMs,
-      nowMs = System.currentTimeMillis() + 48L * dayMs)
-    assert(r.isEmpty, "log-referenced files are live even before the head repairs")
-    // repair promotes the newest entry
-    assert(Warehouse.repairHead(path) == 2)
+      nowMs = System.currentTimeMillis())
+    assert(r.nonEmpty && r.forall(!_._3), "young unpublished batch files spared")
+    added.foreach(f => assert(
+      java.nio.file.Files.exists(java.nio.file.Paths.get(path, f))))
+    // and the next commit takes v2 against the surviving head
+    val v2 = Warehouse.commitSnapshot(path,
+      Warehouse.manifestedFiles(path) ++ added, expectedHead = Some(1))
+    assert(v2 == 2 && v1 == 1)
     assert(Warehouse.readManifested(spark, path, sc).count() == 9)
-    // and the next commit sequences correctly after the recovered head
-    val v3 = Warehouse.commitSnapshot(path, Warehouse.manifestedFiles(path),
-      expectedHead = Some(2))
-    assert(v3 == 3 && v1 == 1)
   }
 
   test("an all-rows-deleted partition needs emptiedDirs to leave the manifest") {

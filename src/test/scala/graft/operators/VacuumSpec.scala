@@ -17,7 +17,7 @@ class VacuumSpec extends AnyFunSuite {
     val path = graft.Staging.fresh("vacspec")
     Warehouse.writePartitioned(
       graft.Tables.documents(spark, sfDir), "source", path, firstRun = true)
-    Warehouse.writeFileManifest(path)
+    Warehouse.commitSnapshotFromListing(path)
     (path, graft.Tables.documents(spark, sfDir).count())
   }
 
@@ -66,7 +66,7 @@ class VacuumSpec extends AnyFunSuite {
     val path = graft.Staging.fresh("vacnoman")
     Warehouse.writePartitioned(
       graft.Tables.documents(spark, sfDir), "source", path, firstRun = true)
-    // no writeFileManifest: every file would read as an orphan
+    // no commit: every file would read as an orphan
     val ex = intercept[IllegalArgumentException] {
       Warehouse.vacuum(path, retentionMs = 0L, nowMs = System.currentTimeMillis())
     }
@@ -78,7 +78,7 @@ class VacuumSpec extends AnyFunSuite {
   test("a committed-but-EMPTY manifest stays vacuumable (emptied-lake orphans reclaim)") {
     val path = graft.Staging.fresh("vacempty")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "source=x"))
-    Warehouse.writeFileManifest(path) // lake legitimately empty: manifest commits ""
+    Warehouse.commitSnapshotFromListing(path) // lake legitimately empty: the entry lists nothing
     // an aborted ingest then leaves an aged orphan behind
     val orphan = java.nio.file.Paths.get(path, "source=x", "part-orphan-old.parquet")
     java.nio.file.Files.writeString(orphan, "junk")
