@@ -46,7 +46,11 @@ object Bench {
     * hash-agg stages) is multi-second Janino work that otherwise lands
     * inside the first measured query touching that table, and the scan
     * also warms the OS page cache, so warming only SOME tables would skew
-    * comparisons across query families. */
+    * comparisons across query families. The warmed classes now stay
+    * resident: GraftSession's codegen cache holds 1000 classes, not
+    * Spark's default 100 that the next queries' classes soon pushed them
+    * out of, and the scan classes every later query of a table reuses
+    * stay among its recently used entries. */
   private[graft] def warmup(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).selectExpr("count(l_orderkey)").collect()

@@ -1314,7 +1314,9 @@ object SimilarityQueries {
     *   - Runs on a CLONED session (`newSession`: shared context and staged
     *     data, private SQLConf), so the loop's shuffle-partition tuning
     *     never mutates the caller's session — concurrent queries on the
-    *     caller see no conf change.
+    *     caller see no conf change. The clone shares the JVM's compiled
+    *     code (GraftSession), so a repeated call reuses the classes an
+    *     earlier call compiled.
     *   - Loop width derives from the staged graph's on-disk size (~8 MB
     *     ≈ 200k edges per partition, a driver-side metadata read — no
     *     counting job; clamped to [1, defaultParallelism];
@@ -1984,7 +1986,9 @@ object SimilarityQueries {
 
   /** Convergence-driven quantized PageRank — [[prPass]] riding the q50
     * loop discipline: a CLONED session whose shuffle width derives from
-    * the staged graph size (never the caller's conf), per-pass state
+    * the staged graph size (never the caller's conf) and which shares the
+    * JVM's compiled code (GraftSession), so a repeated call reuses the
+    * classes an earlier call compiled; per-pass state
     * staged through PARQUET (two ping-pong dirs under one staging root:
     * pass N overwrites the dir pass N-1 no longer reads — the
     * (current, previous) window as directories), and convergence observed

@@ -48,7 +48,9 @@ object StreamSources {
     // the parent session's conf, which was safe only under strictly
     // sequential drains; ConcurrentDrainSpec drives two drains at once.
     // Builder-level configs (UTC, nanosAsLong, extensions) live in the
-    // shared SparkConf, so the child inherits them.
+    // shared SparkConf, so the child inherits them, and with artifact
+    // isolation off (GraftSession) the child shares the parent's compiled
+    // code: a drain recompiles only the stages that inline its watermark.
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_STREAM_STATE_PARTITIONS", "4"))
